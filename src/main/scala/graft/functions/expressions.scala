@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -476,7 +477,8 @@ object SortedIntersectCountImpl {
   * index order starting from 0.0 (same float64 rounding), length
   * mismatch → null (zip_with pads the shorter side with null, the
   * null product poisons the fold), any null element → null, both
-  * empty → 0.0. */
+  * empty → 0.0. Inputs other than `array<float|double>` fail at
+  * analysis time (no implicit widening). */
 case class FloatDot(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -484,11 +486,20 @@ case class FloatDot(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "float_dot"
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ArrayType(DoubleType | FloatType, _) => false
+      case _ => true
+    } match {
+      case Some(t) => TypeCheckResult.TypeCheckFailure(
+        s"float_dot expects array<float|double> inputs, got ${t.simpleString}")
+      case None => TypeCheckResult.TypeCheckSuccess
+    }
+
+  // only called on analyzed (type-checked) children
   private def elemIsDouble(e: Expression): Boolean = e.dataType match {
     case ArrayType(DoubleType, _) => true
-    case ArrayType(FloatType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"float_dot expects array<float|double>, got $t")
+    case _ => false
   }
   // lazy: child dataTypes are only known post-analysis
   private lazy val leftIsDouble = elemIsDouble(left)

@@ -6,15 +6,14 @@ import org.apache.spark.sql.functions._
 /** Shared LSH band-join machinery. */
 object Lsh {
 
-  /** Hash-spread a banded frame over the session's full shuffle width
-    * before a band self-join. The join's work is its OUTPUT (hot
-    * buckets emit freq² candidate rows), so its parallelism must not
-    * be inherited from a tiny upstream layout — with cached-plan AQE
-    * re-optimization on (build.sbt), a dimension-sized signature cache
-    * coalesces to ONE partition and the candidate explosion would run
-    * on numBands tasks (measured 3× the wall of the spread join at
-    * p32). Explicit numPartitions pins the width (AQE never coalesces
-    * a REPARTITION_BY_NUM shuffle).
+  /** Hash-spread a banded frame over the session's spread width (see
+    * [[spreadBy]]) before a band self-join. The join's work is its
+    * OUTPUT (hot buckets emit freq² candidate rows), so its
+    * parallelism must not be inherited from a tiny upstream layout —
+    * with cached-plan AQE re-optimization on (build.sbt), a
+    * dimension-sized signature cache coalesces to ONE partition and
+    * the candidate explosion would run on numBands tasks (measured 3×
+    * the wall of the spread join at p32).
     *
     * `saltById` (default true — r8): hash on (band_key, id), not
     * band_key alone. The self-join paths probe a BROADCAST build
@@ -22,7 +21,7 @@ object Lsh {
     * by band_key alone put every hot bucket's freq² candidate
     * explosion on ONE task (the lsh band stage ran 1.1 s wall for
     * 5 CPU-s of work, one straggler task ≈ the whole stage). Adding
-    * `id` spreads a hot bucket's probe rows across the full width; a
+    * `id` spreads a hot bucket's probe rows across the spread width; a
     * corpus-scale sort-merge band join re-shuffles by band_key from
     * either layout, and ITS hot bucket lands on one reducer
     * regardless — per-bucket capping is the skew answer there, not
@@ -37,20 +36,32 @@ object Lsh {
       (if (saltById) Seq(col("band_key"), col("id"))
        else Seq(col("band_key"))): _*)
 
-  /** [[spreadBands]] generalized: hash-spread any frame over the
-    * session's full shuffle width on the given columns before an
-    * operation whose work is its OUTPUT (candidate generation or
-    * all-pairs scoring probing a broadcast build side). A tiny input
-    * — one scan split of a KB-sized parquet, a coalesced cached frame
-    * — otherwise runs the whole explosion on ONE task (the
-    * embedding-pair queries measured 3% busy on 32 cores). Explicit
-    * numPartitions = REPARTITION_BY_NUM, which AQE never coalesces;
-    * the width follows `spark.sql.shuffle.partitions`, so it is
-    * scale-adaptive, not a local-mode constant. */
+  /** [[spreadBands]] generalized: hash-spread any frame on the given
+    * columns before an operation whose work is its OUTPUT (candidate
+    * generation or all-pairs scoring probing a broadcast build side).
+    * A tiny input — one scan split of a KB-sized parquet, a coalesced
+    * cached frame — otherwise runs the whole explosion on ONE task
+    * (the embedding-pair queries measured 3% busy on 32 cores).
+    *
+    * The width is derived from the cluster, not configured:
+    * `min(spark.sql.shuffle.partitions, 2 × defaultParallelism)` —
+    * two tasks per task slot, enough to even out skew between slots,
+    * capped by the session's shuffle width. An explicit numPartitions
+    * is a REPARTITION_BY_NUM, which AQE never coalesces, so pinning
+    * the full shuffle width (200 by default) ran near-empty tasks by
+    * the hundred on every spread stage of a small cluster; sessions
+    * whose shuffle width is already at most twice the slots keep it
+    * exactly. `defaultParallelism` is read when the frame is built: it
+    * is `spark.default.parallelism` when set, else the cores of the
+    * executors registered at that moment — under dynamic allocation
+    * that can be a cold pool, so such deployments set
+    * `spark.default.parallelism` to the slots they scale to. */
   def spreadBy(df: DataFrame,
-      cols: org.apache.spark.sql.Column*): DataFrame =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-      cols: _*)
+      cols: org.apache.spark.sql.Column*): DataFrame = {
+    val spark = df.sparkSession
+    df.repartition(math.min(spark.sessionState.conf.numShufflePartitions,
+      2 * spark.sparkContext.defaultParallelism), cols: _*)
+  }
 
   /** Per-bucket frequency cap for a banded (key, member) frame — the
     * winnowing `maxDocFreq` guard generalized: adversarial inputs can

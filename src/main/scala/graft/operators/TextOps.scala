@@ -224,10 +224,15 @@ object TextOps {
     * [[tokenHashSet]]'s 60-bit encoding; JaccardPairsSpec pins
     * equality against the literal string-set formulation).
     *
-    * The size-ratio prefilter is EXACT, not a heuristic:
-    * |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so
-    * J ≤ min/max < minJaccard whenever the guard fails — it only
-    * skips the merge for pairs the threshold already excludes. */
+    * The size-ratio prefilter never drops a pair the final filter
+    * keeps: |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so
+    * J ≤ min/max, and the guard compares min against
+    * minJaccard·max·(1 − 1e-12). The slack covers the rounding of the
+    * float product, which at an exact boundary (J = min/max =
+    * minJaccard) can land one ulp above min while the final filter's
+    * rounded quotient equals minJaccard; a relative 1e-12 is far above
+    * those few ulps and far below any real ratio gap, so the guard
+    * only skips the merge for pairs the threshold already excludes. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, maxChars: Int, minJaccard: Double): DataFrame = {
     val hs = array_sort(array_distinct(transform(
@@ -241,7 +246,8 @@ object TextOps {
     a.crossJoin(broadcast(b))
       .where(col("id_a") < col("id_b"))
       .where(least(col("sa"), col("sb")).cast("double") >=
-        lit(minJaccard) * greatest(col("sa"), col("sb")).cast("double"))
+        lit(minJaccard * (1 - 1e-12)) *
+          greatest(col("sa"), col("sb")).cast("double"))
       .withColumn("inter", graft.functions.functions
         .sorted_intersect_count(col("ha"), col("hb")).cast("double"))
       .withColumn("uni",
@@ -289,6 +295,24 @@ object TextOps {
   def minhashA(k: Int): Long = 1103L + 29L * k
   def minhashB(k: Int): Long = 12345L + 7L * k
 
+  /** `sig0..sig{numHashes-1}` of ONE row, from the row's array of
+    * 60-bit token hashes ([[tokenHashSet]], or any array holding the
+    * [[tokenHash60]] of each distinct token): sig_k =
+    * min(((h mod p)·a_k + b_k) mod p) over the array. The one per-row
+    * signature definition of the batch, incremental and streaming
+    * paths. Values are IDENTICAL to [[minhashSignature]] over
+    * [[tokenHashes]] (tokenHash = tokenHash60 mod p, and a min does
+    * not see duplicates or order; SignaturePropertySpec pins it). A
+    * null array gives null signatures — filter such rows out before
+    * banding ([[signatureBands]] does), as the aggregate path emits
+    * no signature row for them. The caller stages the hash array in
+    * its own projection or cache: it is read once per permutation. */
+  private[operators] def minhashSignatureOf(hashes60: Column,
+      numHashes: Int): Seq[Column] =
+    (0 until numHashes).map(k => array_min(transform(hashes60,
+      h => ((h % MinHashP) * minhashA(k) + minhashB(k)) % MinHashP))
+      .as(s"sig$k"))
+
   /** One row per (id, token) with the reduced token hash. */
   def tokenHashes(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("id"),
@@ -303,19 +327,19 @@ object TextOps {
   }
 
   /** PER-ROW MinHash signature: appends `sig0..sig{n-1}` computed
-    * entirely inside each row (array_min over the row's distinct-token
-    * hash array) — NO aggregation, so unlike [[minhashSignature]] it
-    * composes with streaming operators (`dropDuplicatesWithinWatermark`
-    * cannot follow a groupBy). Values are IDENTICAL to the batch
-    * signature (same md5-derived token hash, same permutations; a
-    * spec pins the equality). Null-text rows get NULL signatures —
-    * the batch path emits no signature row for them at all, so
-    * null-text docs are never signature-duplicates of each other on
-    * either path (streaming callers must key them uniquely; see
-    * `DocStream.signatureDedupStream`). The token-hash array is staged in its
-    * own projection and referenced once per signature column, so
-    * CollapseProject keeps the boundary and each token is md5-hashed
-    * ONCE per row, not once per permutation. */
+    * entirely inside each row ([[minhashSignatureOf]] over the row's
+    * distinct-token hash array) — NO aggregation, so unlike
+    * [[minhashSignature]] it composes with streaming operators
+    * (`dropDuplicatesWithinWatermark` cannot follow a groupBy). Values
+    * are IDENTICAL to the batch signature (same md5-derived token hash,
+    * same permutations; specs pin the equality). Null-text rows get
+    * NULL signatures — the batch path emits no signature row for them
+    * at all, so null-text docs are never signature-duplicates of each
+    * other on either path (streaming callers must key them uniquely;
+    * see `DocStream.signatureDedupStream`). The token-hash array is
+    * staged in its own projection and referenced once per signature
+    * column, so CollapseProject keeps the boundary and each token is
+    * md5-hashed ONCE per row, not once per permutation. */
   def withMinhashSignature(df: DataFrame, textCol: String,
       numHashes: Int): DataFrame = {
     require(numHashes >= 1, "numHashes must be positive")
@@ -325,12 +349,9 @@ object TextOps {
       s"input already has column(s) ${clash.mkString(", ")} — " +
         "withMinhashSignature would clobber or duplicate them")
     val staged = df.withColumn("hm_arr",
-      transform(array_distinct(tokens(col(textCol))), t => tokenHash(t)))
-    val keep = df.columns.map(col)
-    val sigs = (0 until numHashes).map(k =>
-      array_min(transform(col("hm_arr"),
-        h => (h * minhashA(k) + minhashB(k)) % MinHashP)).as(s"sig$k"))
-    staged.select(keep ++ sigs: _*)
+      transform(array_distinct(tokens(col(textCol))), t => tokenHash60(t)))
+    staged.select(df.columns.map(col) ++
+      minhashSignatureOf(col("hm_arr"), numHashes): _*)
   }
 
   /** (id, band_key) rows of a signature frame: `numBands` bands of
@@ -342,6 +363,20 @@ object TextOps {
         (0 until rowsPerBand).map(r => col(s"sig${b * rowsPerBand + r}"))): _*)
       sig.select(col("id"), key.as("band_key"))
     }.reduce(_ unionByName _)
+
+  /** (id, band_key) rows of an (id, toks) token-hash-set frame, banded
+    * like [[bandKeys]] over per-row signatures ([[minhashSignatureOf]])
+    * — map-only: no token explode, no shuffle, no aggregate. Rows whose
+    * `toks` is null (null text) or empty have no signature and get no
+    * band keys, exactly like the aggregate path. */
+  private[operators] def signatureBands(toks: DataFrame, numHashes: Int,
+      numBands: Int): DataFrame =
+    bandKeys(signatures(toks, numHashes), numBands, numHashes / numBands)
+
+  /** (id, sig0..) of an (id, toks) frame's rows that have tokens. */
+  private def signatures(toks: DataFrame, numHashes: Int): DataFrame =
+    toks.where(size(col("toks")) > 0)
+      .select(col("id") +: minhashSignatureOf(col("toks"), numHashes): _*)
 
   /** LSH candidate pairs: signatures banded `numBands` × `rowsPerBand`;
     * docs sharing a band bucket become candidates. The band join is
@@ -413,11 +448,21 @@ object TextOps {
       numBands: Int, minJaccard: Double,
       maxBandFreq: Int = Int.MaxValue): DataFrame = {
     val spark = repDocs.sparkSession
-    val hashes = tokenHashes(repDocs, "id", "text")
+    // persisted for three reasons: the signatures are derived from it
+    // (each token is md5-hashed ONCE per rep, for both uses), it feeds
+    // BOTH verify join sides, and the materialized size stat lets
+    // Spark broadcast it when the rep dimension is small (unpersisted,
+    // the estimate inflates through the upstream join and both verify
+    // joins fall back to sorting + shuffling the full candidate set —
+    // measured 10× slower)
+    val tokSets = repDocs.select(col("id"),
+      TextOps.tokenHashSet(col("text")).as("toks")).persist()
+    graft.engine.Caches.register(spark,
+      () => { tokSets.unpersist(false); () })
     // rep-dimension-sized (one row per distinct content) and consumed
-    // 2·numBands times by the banded self-join: without the cache the
-    // signature aggregate re-runs once per band PER JOIN SIDE
-    val sig = minhashSignature(hashes, numHashes).persist()
+    // 2·numBands times by the banded self-join: cached so the
+    // per-row signatures run once, not once per band PER JOIN SIDE
+    val sig = signatures(tokSets, numHashes).persist()
     graft.engine.Caches.register(spark,
       () => { sig.unpersist(false); () })
     val rowsPerBand = numHashes / numBands
@@ -471,15 +516,6 @@ object TextOps {
         .where(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct()
     }
-    // persisted for two reasons: it feeds BOTH verify join sides, and
-    // the materialized size stat lets Spark broadcast it when the rep
-    // dimension is small (unpersisted, the estimate inflates through
-    // the upstream join and both verify joins fall back to sorting +
-    // shuffling the full candidate set — measured 10× slower)
-    val tokSets = repDocs.select(col("id"),
-      TextOps.tokenHashSet(col("text")).as("toks")).persist()
-    graft.engine.Caches.register(spark,
-      () => { tokSets.unpersist(false); () })
     verifyJaccard(cand, tokSets, minJaccard)
   }
 
@@ -652,21 +688,19 @@ object TextOps {
     val reps = repDocsOf(df, idCol, textCol, members)
     val repToks = reg(reps.select(col("id"),
       TextOps.tokenHashSet(col("text")).as("toks")))
-    val repBands = reg(bandKeys(
-      minhashSignature(tokenHashes(reps, "id", "text"), numHashes),
-      numBands, numHashes / numBands)
-      .select(col("id"), col("band_key")))
+    // bands from the cached hash sets: each token is md5-hashed once
+    val repBands = reg(signatureBands(repToks, numHashes, numBands))
     MinhashIndex(members, repToks, repBands, numHashes, numBands)
   }
 
   /** Resolve an ingest batch against a corpus index: every batch doc's
     * global content group (corpus rid where the ckey already exists),
-    * plus the genuinely-new representatives' docs and band keys. */
+    * plus the genuinely-new representatives' ids and (id, toks) token
+    * hash sets — the one tokenization of the fresh reps, which their
+    * verify sets and (via [[signatureBands]]) band keys both read. */
   private def resolveBatch(index: MinhashIndex, newDocs: DataFrame,
       idCol: String, textCol: String):
-      (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val numHashes = index.numHashes
-    val numBands = index.numBands
+      (DataFrame, DataFrame, DataFrame) = {
     // every group has exactly ONE member row with id == rid (the
     // representative is always a member: min id at build, corpus rid
     // on append, min-surviving on remove), so the rep-row filter IS
@@ -684,12 +718,10 @@ object TextOps {
     val freshRepIds = newMembers
       .where(!col("joined_corpus") && col("id") === col("rid"))
       .select("id")
-    val freshDocs = newDocs.select(col(idCol).as("id"),
+    val freshToks = newDocs.select(col(idCol).as("id"),
       col(textCol).as("text")).join(freshRepIds, Seq("id"))
-    val freshBands = bandKeys(
-      minhashSignature(tokenHashes(freshDocs, "id", "text"), numHashes),
-      numBands, numHashes / numBands).select(col("id"), col("band_key"))
-    (newMembers, freshRepIds, freshDocs, freshBands)
+      .select(col("id"), TextOps.tokenHashSet(col("text")).as("toks"))
+    (newMembers, freshRepIds, freshToks)
   }
 
   /** The index after ingesting a batch: batch docs join their content
@@ -704,14 +736,14 @@ object TextOps {
     * `IncrementalDedupSpec` maintenance loop models the pattern. */
   def minhashIndexAppend(index: MinhashIndex, newDocs: DataFrame,
       idCol: String, textCol: String): MinhashIndex = {
-    val (newMembers, _, freshDocs, freshBands) =
+    val (newMembers, _, freshToks) =
       resolveBatch(index, newDocs, idCol, textCol)
     index.copy(
       members = index.members.unionByName(
         newMembers.select(col("id"), col("ckey"), col("rid"))),
-      repToks = index.repToks.unionByName(freshDocs.select(col("id"),
-        TextOps.tokenHashSet(col("text")).as("toks"))),
-      repBands = index.repBands.unionByName(freshBands))
+      repToks = index.repToks.unionByName(freshToks),
+      repBands = index.repBands.unionByName(
+        signatureBands(freshToks, index.numHashes, index.numBands)))
   }
 
   /** The index after REMOVING documents (takedowns — the dedup-layer
@@ -789,9 +821,11 @@ object TextOps {
     }
     // global content resolution: a batch ckey found in the corpus
     // joins that group (rid = the CORPUS representative)
-    val (newMembersRaw, freshRepIds, freshDocs, freshBands) =
+    val (newMembersRaw, freshRepIds, freshToks) =
       resolveBatch(index, newDocs, idCol, textCol)
     val newMembers = reg(newMembersRaw)
+    val freshBands = signatureBands(freshToks, index.numHashes,
+      index.numBands)
     val gainedRepIds = newMembers.where(col("joined_corpus"))
       .select(col("rid").as("id")).distinct()
     // band universe = saved index + fresh reps; the frequency cap
@@ -808,8 +842,7 @@ object TextOps {
       .select(least(col("id_l"), col("id_r")).as("id_a"),
         greatest(col("id_l"), col("id_r")).as("id_b"))
       .distinct()
-    val allToks = reg(index.repToks.unionByName(freshDocs.select(
-      col("id"), TextOps.tokenHashSet(col("text")).as("toks"))))
+    val allToks = reg(index.repToks.unionByName(freshToks))
     val verified = verifyJaccard(cand, allToks, minJaccard)
       .select(col("id_a").as("rid_a"), col("id_b").as("rid_b"),
         col("jaccard"))

@@ -74,6 +74,19 @@ class FloatDotSpec extends SparkSpec {
     assert(r.getDouble(0) == r.getDouble(1) && r.getDouble(0) == 2.5)
   }
 
+  test("non-float array inputs fail at analysis time") {
+    import spark.implicits._
+    val df = Seq((Seq(1, 2), Seq(1f, 2f), "x")).toDF("ints", "floats", "s")
+    for ((a, b, got) <- Seq(("ints", "floats", "array<int>"),
+        ("floats", "s", "string"))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(functions.float_dot(col(a), col(b))))
+      assert(e.getMessage.contains(
+        s"float_dot expects array<float|double> inputs, got $got"),
+        e.getMessage)
+    }
+  }
+
   test("interpreted (non-codegen) eval path agrees") {
     import org.apache.spark.sql.catalyst.util.ArrayData
     val a = ArrayData.toArrayData(Array(1.0f, 2.0f, 3.0f))

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The r8 [[TextOps.jaccardPairs]] rewrite (hashed shingle sets +
-  * zero-alloc sorted merge + the exact size-ratio prefilter) must
+  * zero-alloc sorted merge + the size-ratio prefilter) must
   * emit EXACTLY the pairs and jaccard doubles of the literal
   * string-set formulation it replaced. Randomized corpora are built
   * to hit the edge classes: near-duplicate strings (pairs straddling
@@ -59,6 +59,22 @@ class JaccardPairsSpec extends SparkSpec {
       assert(got == want,
         s"minJaccard=$minJ got=${got.size} want=${want.size}")
     }
+  }
+
+  test("a pair exactly at the threshold survives the size prefilter") {
+    import spark.implicits._
+    // 1-gram shingles: 7 distinct chars inside 25, so J = 7/25 = min/max,
+    // and 0.28 * 25.0 rounds to 7.000000000000001 > 7 — an unslacked
+    // `min >= minJaccard * max` guard drops the pair the final
+    // `jaccard >= minJaccard` filter keeps
+    val minJ = 7.0 / 25
+    assert(minJ * 25.0 > 7.0)
+    val df = Seq((0L, "abcdefg"), (1L, "abcdefghijklmnopqrstuvwxy"))
+      .toDF("doc_id", "text")
+    val got = collectSorted(TextOps.jaccardPairs(
+      df, "doc_id", "text", n = 1, maxChars = 80, minJaccard = minJ))
+    assert(got == collectSorted(referencePairs(df, 1, 80, minJ)))
+    assert(got == Seq((0L, 1L, java.lang.Double.doubleToRawLongBits(minJ))))
   }
 
   test("null text rows never pair (same as the string formulation)") {
