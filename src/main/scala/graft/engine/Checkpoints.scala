@@ -1,13 +1,13 @@
 package graft.engine
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.functions.XXHash64
+import graft.functions.{XXHash64, ZonalPartialsGen}
 import graft.geom.{Zone, ZoneIndex}
 import graft.operators.{ZonalEngine, ZonalStats}
+import graft.operators.ZonalStats.FidStatRow
 import graft.sources.{TileFileStat, TileManifest, TileTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -21,17 +21,29 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * Spark job per file would serialize the cluster behind driver
   * round-trips, so files are grouped into at most `maxChunks` jobs,
   * each wide enough to saturate cluster parallelism while keeping
-  * checkpoint granularity. Each chunk writes its per-FID partial stats
-  * to `<ckptDir>/chunk=<i>/` together with a `lineage.json` recording
-  * the chunk's file list, input fingerprint, per-partition row/pixel
-  * counts and wall time. A restarted run skips every chunk whose
-  * lineage exists AND whose fingerprint matches the current inputs
-  * (zone set, file stats, flags) — a stale or foreign checkpoint dir
-  * is recomputed instead of silently merged. The final merge is a pure
-  * reduction over chunk outputs in a fixed order, so interrupted runs
-  * resume to byte-identical results. The kernel (decode + scanline
-  * assign) runs exactly once per chunk — see [[chunkedFidStats]] for
-  * the one-job-per-chunk layout.
+  * checkpoint granularity.
+  *
+  * Every chunk is ONE Spark job — the kernel (decode + scanline
+  * assign) pass — whose output lands in `<ckptDir>/chunk=<i>/`:
+  *   - without percentiles, the chunk's per-FID stats, collected to
+  *     the driver and written atomically as `stats.json`;
+  *   - with percentiles, the raw per-(tile, fid) partials (with their
+  *     value chunks), written straight from the kernel pass as
+  *     `partials/` parquet — nothing is cached, and the chunk's row and
+  *     pixel totals are observed on that same write.
+  * A `lineage.json` written LAST records the chunk's file list, input
+  * fingerprint, cell range, runId, wall time and metrics: `partialRows`
+  * (kernel output rows) and `pixels` (pixels assigned to a zone), plus
+  * their per-scan-partition split (`partitions`) on the stats.json
+  * path, where it comes free with the collect.
+  *
+  * A restarted run skips every chunk whose lineage exists AND whose
+  * fingerprint matches the current inputs (zone set, file stats,
+  * flags) — a stale or foreign checkpoint dir, or a chunk whose output
+  * landed without its lineage, is recomputed instead of silently
+  * merged. The merge yields driver-side per-FID rows, which feed the
+  * engine's one driver-side rollup ([[ZonalEngine.finishStats]]);
+  * interrupted runs resume to identical results.
   */
 object Checkpoints {
   private val mapper = new ObjectMapper()
@@ -134,26 +146,22 @@ object Checkpoints {
     lineageField(ckptDir, i, "fingerprint").contains(expectedFp)
 
   /** Run the per-FID partial-stats stage chunk by chunk with
-    * checkpointing; returns the merged fid-level stats DataFrame
-    * (same shape as ZonalStats.fidStats), the percentile value-chunk
-    * frame (fid, vals) when `collectValues`, and the number of chunks
-    * actually (re)computed this run.
+    * checkpointing; returns the merged per-FID stats as driver-side
+    * rows (zone-cardinality — the engine's broadcastable-zones
+    * assumption), the percentile value-chunk frame (fid, vals) when
+    * `collectValues`, and the number of chunks actually (re)computed
+    * this run.
     *
-    * Chunk outputs are PRE-AGGREGATED per FID: chunk outputs only
-    * ever merge through an algebraic (sum/min/max) reduction, so a
-    * chunk persists zone-cardinality rows, not per-(tile,fid)
-    * partials. The non-percentile path goes further: ONE Spark job
-    * per chunk (per-partition pre-agg collected to the driver) and a
-    * driver-side atomic `stats.json` — no cache, no second pass over
-    * the kernel output, no per-chunk parquet commit protocol — so
-    * resumability costs only the chunking itself and the path tracks
-    * the direct run's wall clock. Raw partials (with `vals`) are
-    * written as parquet only when the exact-percentile path needs the
-    * value chunks. Merge order is fixed (partition, fid, chunk), so
-    * resumed and fresh runs are float64-bit-identical. Driver memory
-    * for the merge is O(chunks × zones) — bounded by the same
-    * zones-are-broadcastable assumption the whole engine (and the
-    * reference) makes.
+    * Each chunk costs exactly one Spark job (see the object doc). The
+    * non-percentile path pre-aggregates per (scan partition, fid) in
+    * that job and merges on the driver in a fixed order (partition,
+    * fid, chunk), so resumed and fresh runs are float64-bit-identical
+    * and the merge runs no Spark job at all. The percentile path
+    * writes its partials parquet in that job; the merge then reads
+    * every chunk's partials with their known schema (no footer
+    * inference), collects the per-FID stats ONCE, and hands the value
+    * chunks on for the group percentiles. Driver memory for the merge
+    * is O(chunks × zones).
     *
     * @param filesOverride restrict the run to these manifest files
     *   (e.g. [[graft.sources.TileTable.prunedFiles]] of the zones'
@@ -170,7 +178,7 @@ object Checkpoints {
       lastWins: Boolean = false,
       filesOverride: Option[Seq[TileFileStat]] = None,
       band: Option[Int] = None)
-      : (DataFrame, Option[DataFrame], Int) = {
+      : (Seq[FidStatRow], Option[DataFrame], Int) = {
     require(table.manifest.bands.isEmpty || band.isDefined,
       s"${table.root} is multi-band: pass the band to address")
     val idx = new ZoneIndex(zones.toArray)
@@ -206,24 +214,20 @@ object Checkpoints {
         val tiles = band.map(b => raw.where(col("band") === b))
           .getOrElse(raw)
         if (collectValues) {
-          // percentile (parity-mode) runs need the raw value chunks:
-          // cache the partials, derive metrics + the parquet write
-          // from ONE kernel pass
-          val partials = ZonalStats.tilePartials(tiles, bc, grid, nodata,
-            collectValues = true, lastWins)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val metrics = partials
-              .groupBy(spark_partition_id().as("partition"))
-              .agg(count(lit(1)).as("partial_rows"),
-                sum("cnt").as("pixels"))
-              .collect()
-            partials.write.mode("overwrite").parquet(s"$dir/partials")
-            writeLineage(dir, i, files, fp, runId,
-              (System.nanoTime() - t0) / 1e6,
-              metrics.map(r => (r.getInt(0), r.getLong(1),
-                if (r.isNullAt(2)) 0L else r.getLong(2))))
-          } finally partials.unpersist()
+          // percentile runs need the raw value chunks: the kernel pass
+          // writes them directly, and the chunk totals ride on the
+          // same job as observed metrics
+          val obs = org.apache.spark.sql.Observation()
+          ZonalStats.tilePartials(tiles, bc, grid, nodata,
+              collectValues = true, lastWins)
+            .observe(obs, count(lit(1)).as("rows"),
+              coalesce(sum("cnt"), lit(0L)).as("pixels"))
+            .write.mode("overwrite").parquet(s"$dir/partials")
+          val m = obs.get
+          writeLineage(dir, i, files, fp, runId,
+            (System.nanoTime() - t0) / 1e6,
+            m("rows").asInstanceOf[Long], m("pixels").asInstanceOf[Long],
+            partitions = None)
         } else {
           // ONE Spark job per chunk: per-(partition, fid) pre-agg
           // collected to the driver (zone-cardinality × scan-partition
@@ -248,20 +252,21 @@ object Checkpoints {
               (part, rs.map(_.getLong(2)).sum, rs.map(_.getLong(3)).sum)
           }.toArray
           val byFid = scala.collection.mutable.LinkedHashMap
-            .empty[Long, ChunkFidStat]
+            .empty[Long, FidStatRow]
           rows.foreach { r =>
             val fid = r.getLong(1)
             val s = byFid.getOrElseUpdate(fid,
-              ChunkFidStat(fid, 0L, 0L, Double.PositiveInfinity,
+              FidStatRow(fid, 0L, 0L, Double.PositiveInfinity,
                 Double.NegativeInfinity, 0.0, 0.0))
-            byFid(fid) = ChunkFidStat(fid,
+            byFid(fid) = FidStatRow(fid,
               s.cnt + r.getLong(3), s.nodata + r.getLong(4),
               math.min(s.mn, r.getDouble(5)), math.max(s.mx, r.getDouble(6)),
               s.sum + r.getDouble(7), s.sumsq + r.getDouble(8))
           }
           writeChunkStats(dir, byFid.values.toSeq.sortBy(_.fid))
           writeLineage(dir, i, files, fp, runId,
-            (System.nanoTime() - t0) / 1e6, metrics)
+            (System.nanoTime() - t0) / 1e6, metrics.map(_._2).sum,
+            metrics.map(_._3).sum, Some(metrics))
         }
         computed.incrementAndGet()
       }
@@ -284,52 +289,40 @@ object Checkpoints {
       bc.destroy()
     }
 
-    import spark.implicits._
-    if (chunks.isEmpty) {
-      // nothing to scan (fully pruned table): empty fid-stats frame
-      val empty = Seq.empty[(Long, Long, Long, Double, Double, Double,
-        Double)].toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
-      return (empty, None, 0)
-    }
-    if (collectValues) {
-      val all = spark.read.parquet(
+    if (chunks.isEmpty) (Nil, None, 0) // fully pruned table
+    else if (collectValues) {
+      val all = spark.read.schema(ZonalPartialsGen.Schema).parquet(
         chunks.indices.map(i => s"${chunkDir(ckptDir, i)}/partials"): _*)
-      val vals = Some(all.select(col("fid"), col("vals"))
-        .where(size(col("vals")) > 0))
-      (ZonalStats.fidStats(all.drop("vals")), vals, computed.get())
+      val vals = all.select(col("fid"), col("vals"))
+        .where(size(col("vals")) > 0)
+      (ZonalStats.collectFidStats(ZonalStats.fidStats(all)), Some(vals),
+        computed.get())
     } else {
       // cross-chunk merge is a driver-side fold over the chunk stats
       // files in chunk order (zone-cardinality rows per chunk) —
       // deterministic float64 order, no Spark job at all
       val byFid = scala.collection.mutable.LinkedHashMap
-        .empty[Long, ChunkFidStat]
+        .empty[Long, FidStatRow]
       chunks.indices.foreach { i =>
         readChunkStats(chunkDir(ckptDir, i)).foreach { s =>
           val m = byFid.get(s.fid)
           byFid(s.fid) = m match {
             case None => s
-            case Some(p) => ChunkFidStat(s.fid, p.cnt + s.cnt,
+            case Some(p) => FidStatRow(s.fid, p.cnt + s.cnt,
               p.nodata + s.nodata, math.min(p.mn, s.mn),
               math.max(p.mx, s.mx), p.sum + s.sum, p.sumsq + s.sumsq)
           }
         }
       }
-      val merged = byFid.values.toSeq.sortBy(_.fid)
-        .map(s => (s.fid, s.cnt, s.nodata, s.mn, s.mx, s.sum, s.sumsq))
-        .toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
-      (merged, None, computed.get())
+      (byFid.values.toSeq.sortBy(_.fid), None, computed.get())
     }
   }
-
-  /** One chunk's per-FID algebraic stats. */
-  final case class ChunkFidStat(fid: Long, cnt: Long, nodata: Long,
-      mn: Double, mx: Double, sum: Double, sumsq: Double)
 
   /** Chunk stats sidecar (stats.json, written atomically BEFORE
     * lineage.json): doubles stored as raw IEEE-754 bits so ±Infinity
     * sentinels and exact values survive the JSON round-trip. */
   private def writeChunkStats(dir: String,
-      stats: Seq[ChunkFidStat]): Unit = {
+      stats: Seq[FidStatRow]): Unit = {
     val o = mapper.createArrayNode()
     stats.foreach { s =>
       val n = o.addObject()
@@ -346,12 +339,12 @@ object Checkpoints {
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def readChunkStats(dir: String): Seq[ChunkFidStat] = {
+  private def readChunkStats(dir: String): Seq[FidStatRow] = {
     val p = Paths.get(dir, "stats.json")
     val arr = mapper.readTree(Files.readString(p))
-    val out = scala.collection.mutable.ArrayBuffer.empty[ChunkFidStat]
+    val out = scala.collection.mutable.ArrayBuffer.empty[FidStatRow]
     arr.forEach { n =>
-      out += ChunkFidStat(n.get("fid").asLong(), n.get("cnt").asLong(),
+      out += FidStatRow(n.get("fid").asLong(), n.get("cnt").asLong(),
         n.get("nodata").asLong(),
         java.lang.Double.longBitsToDouble(n.get("mn").asLong()),
         java.lang.Double.longBitsToDouble(n.get("mx").asLong()),
@@ -384,22 +377,19 @@ object Checkpoints {
       exactPercentiles: Boolean = true,
       band: Option[Int] = None,
       fidStatsSink: Option[DataFrame => Unit] = None): DataFrame = {
-    import spark.implicits._
     val percs = ZonalEngine.normalizePercentiles(percentiles)
     val zonesSimpl = zones.map(z =>
       z.copy(geom = Zone.simplifyHalfPixel(z.geom, table.grid.gt.px)))
     // prune the chunk list to the zones' envelope — a job over a
     // region touches only that region's files, like the direct path
     val env = Zone.totalEnvelope(zonesSimpl)
-    val (fidStats, vals, _) = chunkedFidStats(spark, table, zonesSimpl,
+    val (fidRows, vals, _) = chunkedFidStats(spark, table, zonesSimpl,
       ckptDir, runId, collectValues = percs.nonEmpty,
       maxChunks = maxChunks, lastWins = lastWins,
       filesOverride = Some(table.prunedFiles(env)), band = band)
-    val zonesDf = zonesSimpl.map(z => (z.fid, Option(z.group)))
-      .toDF("fid", "group")
-    fidStatsSink.foreach(_(fidStats))
-    val res = ZonalEngine.finishStats(spark, fidStats, vals, zonesSimpl,
-      zonesDf, table.grid, table.nodataFor(band), percs, exactPercentiles,
+    fidStatsSink.foreach(_(ZonalStats.fidStatsFrame(spark, fidRows)))
+    val res = ZonalEngine.finishStats(spark, fidRows, vals, zonesSimpl,
+      table.grid, table.nodataFor(band), percs, exactPercentiles,
       e => table.readPruned(spark, e, band), histogram = None,
       tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty))
     if (keepCheckpoints) res
@@ -492,7 +482,8 @@ object Checkpoints {
 
   private def writeLineage(dir: String, chunk: Int,
       files: Seq[TileFileStat], fp: String, runId: String, wallMs: Double,
-      partitions: Array[(Int, Long, Long)]): Unit = {
+      partialRows: Long, pixels: Long,
+      partitions: Option[Array[(Int, Long, Long)]]): Unit = {
     val o = mapper.createObjectNode()
     o.put("chunk", chunk)
     val fa = o.putArray("files")
@@ -502,11 +493,15 @@ object Checkpoints {
     o.put("fingerprint", fp)
     o.put("runId", runId)
     o.put("wallMs", wallMs)
-    val arr = o.putArray("partitions")
-    partitions.sortBy(_._1).foreach { case (p, rows, px) =>
-      val po = arr.addObject()
-      po.put("partition", p); po.put("partialRows", rows)
-      po.put("pixels", px)
+    o.put("partialRows", partialRows)
+    o.put("pixels", pixels)
+    partitions.foreach { ps =>
+      val arr = o.putArray("partitions")
+      ps.sortBy(_._1).foreach { case (p, rows, px) =>
+        val po = arr.addObject()
+        po.put("partition", p); po.put("partialRows", rows)
+        po.put("pixels", px)
+      }
     }
     Files.createDirectories(Paths.get(dir))
     val tmp = Paths.get(dir, ".lineage.json.tmp")

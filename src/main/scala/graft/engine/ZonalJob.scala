@@ -328,6 +328,10 @@ object ZonalJob {
       ZonalEngine.normalizePercentiles(percentiles))
     val stems = job.rasterPaths.map(p =>
       Paths.get(p).getFileName.toString)
+    // the vector is read and collected once per job; each raster
+    // projects it into its own SRS below
+    val vector = ZoneStore.load(spark, job.aggVector, job.aggField)
+    val vectorSrs = ZoneStore.srs(job.aggVector)
     // Rasters are independent Spark jobs — run them from a bounded
     // pool so per-raster fixed costs overlap (Spark schedules the
     // concurrent jobs FIFO across the cluster). Each raster gets its
@@ -346,9 +350,8 @@ object ZonalJob {
               // P7: reproject the vector into THIS raster's SRS iff the
               // SRS differ / vector SRS missing (runner.py:307-341) —
               // per raster, since each may carry its own projection
-              val zones = graft.geom.Crs.projectZones(
-                ZoneStore.load(spark, job.aggVector, job.aggField),
-                ZoneStore.srs(job.aggVector), table.manifest.srs)
+              val zones = graft.geom.Crs.projectZones(vector, vectorSrs,
+                table.manifest.srs)
               stem -> singleRaster(spark, table, zones, percentiles,
                 ckptDir = Some(ckptDirFor(job, path)))
             }

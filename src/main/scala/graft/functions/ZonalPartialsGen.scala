@@ -45,16 +45,7 @@ case class ZonalPartialsGen(id: Expression, bytes: Expression,
   override def position: Boolean = false
   override def prettyName: String = "zonal_partials"
 
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("fid", LongType, nullable = false),
-    StructField("cnt", LongType, nullable = false),
-    StructField("nodata", LongType, nullable = false),
-    StructField("mn", DoubleType, nullable = false),
-    StructField("mx", DoubleType, nullable = false),
-    StructField("sum", DoubleType, nullable = false),
-    StructField("sumsq", DoubleType, nullable = false),
-    StructField("vals", ArrayType(FloatType, containsNull = false),
-      nullable = false)))
+  override def elementSchema: StructType = ZonalPartialsGen.Schema
 
   override def collectionType: DataType =
     ArrayType(elementSchema, containsNull = false)
@@ -123,6 +114,20 @@ case class ZonalPartialsGen(id: Expression, bytes: Expression,
 }
 
 object ZonalPartialsGen {
+  /** One per-(tile, fid) partial row — also the schema of the
+    * checkpointed partials parquet, so reading it back needs no
+    * footer inference. */
+  val Schema: StructType = StructType(Seq(
+    StructField("fid", LongType, nullable = false),
+    StructField("cnt", LongType, nullable = false),
+    StructField("nodata", LongType, nullable = false),
+    StructField("mn", DoubleType, nullable = false),
+    StructField("mx", DoubleType, nullable = false),
+    StructField("sum", DoubleType, nullable = false),
+    StructField("sumsq", DoubleType, nullable = false),
+    StructField("vals", ArrayType(FloatType, containsNull = false),
+      nullable = false)))
+
   private val EmptyRows = new GenericArrayData(Array.empty[Any])
   private val EmptyVals =
     UnsafeArrayData.fromPrimitiveArray(Array.empty[Float])

@@ -157,9 +157,6 @@ object ZonalEngine {
     val grid = table.grid
     val zones = zonesRaw.map(z => z.copy(geom =
       Zone.simplifyHalfPixel(z.geom, grid.gt.px)))
-    import spark.implicits._
-    val zonesDf = zones.map(z => (z.fid, Option(z.group)))
-      .toDF("fid", "group")
     val deltaStats = fidStatsFor(spark, delta, zonesRaw, grid, nodata,
       simplify = true, lastWins = lastWins)
     // The merge itself is DRIVER-SIDE: per-FID stats are
@@ -170,7 +167,6 @@ object ZonalEngine {
     // instead of spending Spark job rounds on LocalTableScans.
     // Spec-pinned value-identical to the Spark-side
     // mergeFidStats/retractFidStats (TileTableChangesSpec).
-    val tPhase = System.nanoTime()
     val deltaLocal = ZonalStats.collectFidStats(deltaStats)
     val prevLocal = ZonalStats.collectFidStats(prevFidStats)
     val folded = ZonalStats.mergeFidStatsLocal(prevLocal, deltaLocal)
@@ -201,39 +197,15 @@ object ZonalEngine {
           safe ++ rec
         }
     }
-    val merged = ZonalStats.fidStatsFrame(spark, afterRemovals)
-    mergedStatsSink.foreach(_(merged))
-    if (sys.env.get("SPARK_GRAFT_BENCH_PHASES").contains("1"))
-      System.err.println(f"PHASES incr_merge=${
-        (System.nanoTime() - tPhase) / 1e9}%.3f")
-    val tFin = System.nanoTime()
-    // Driver-side rollup when the fallback provably contributes
-    // nothing (r8): the per-FID stats are already local after the
-    // fold, the zone table is dimension-sized, and this path is
-    // percentile-free by contract — routing the rollup through Spark
-    // cost 3-4 job rounds (~0.3 s) of fixed overhead per increment,
-    // the largest slice of the daily-append wall after the delta
-    // decode itself. Value/schema equality with the Spark rollup is
-    // pinned by GroupStatsLocalSpec; a nonempty fallback keeps the
-    // full finishStats path (its scan is a real Spark job anyway).
-    val presentFids = afterRemovals.map(_.fid).toSet
-    val unset = zones.filter(z => !presentFids.contains(z.fid))
-    val fallbackEmpty = unset.isEmpty ||
-      table.prunedFiles(Zone.totalEnvelope(unset)).isEmpty
-    val res =
-      if (fallbackEmpty)
-        ZonalStats.groupStatsLocalFrame(spark, afterRemovals,
-          zones.map(z => (z.fid, Option(z.group))))
-      else finishStats(spark, merged, None, zones, zonesDf, grid,
-        nodata, percentiles = Nil, exactPercentiles = true,
-        tilesFor = e => table.readPruned(spark, e, band),
-        histogram = None,
-        tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty),
-        presentFidsKnown = Some(presentFids))
-    if (sys.env.get("SPARK_GRAFT_BENCH_PHASES").contains("1"))
-      System.err.println(f"PHASES incr_finish=${
-        (System.nanoTime() - tFin) / 1e9}%.3f")
-    res
+    mergedStatsSink.foreach(_(ZonalStats.fidStatsFrame(spark,
+      afterRemovals)))
+    // percentile-free by contract; the manifest prune index proves
+    // most increments need no fallback scan, so the tail is usually
+    // driver-only
+    finishStats(spark, afterRemovals, None, zones, grid, nodata,
+      percentiles = Nil, exactPercentiles = true,
+      tilesFor = e => table.readPruned(spark, e, band), histogram = None,
+      tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty))
   }
 
   /** @param exactPercentiles true (default) = exact numpy-parity
@@ -279,24 +251,22 @@ object ZonalEngine {
       else zonesRaw
     val idx = new ZoneIndex(zones.toArray)
 
-    import spark.implicits._
-    val zonesDf = zones.map(z => (z.fid, Option(z.group)))
-      .toDF("fid", "group")
-
     // bbox short-circuit (runner.py:409-450): zero stats, no tile IO
     if (!idx.totalEnvelope.intersects(grid.rasterEnvelope)) {
-      return zeroStats(zonesDf, pKeys)
+      return ZonalStats.groupStatsLocalFrame(spark, Nil,
+        zones.map(z => (z.fid, Option(z.group))), pKeys)
     }
 
     val bc = spark.sparkContext.broadcast(idx)
     // The decode+PIP kernel is the dominant cost: it must run exactly
-    // once. Per-fid stats are zone-cardinality small — cache THOSE and
-    // let every downstream consumer (fallback detection, rollup) read
-    // the small cache. The raw partials are only cached when the
-    // exact-percentile path needs their value chunks a second time.
-    // Every persist/broadcast is registered for release once the
-    // (dimension-sized) result has materialized — a long-lived session
-    // must not depend on the ContextCleaner for block-manager hygiene.
+    // once. Its per-FID stats are zone-cardinality small, so they are
+    // COLLECTED (one job) and every downstream consumer — fallback
+    // detection, rollup — reads the driver-side rows. The raw partials
+    // are cached only when the exact-percentile path needs their value
+    // chunks a second time. Every persist/broadcast is released once
+    // the (dimension-sized) result has materialized — a long-lived
+    // session must not depend on the ContextCleaner for block-manager
+    // hygiene.
     val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     releases += (() => bc.destroy())
     val partials0 = ZonalStats.tilePartials(tiles, bc, grid, nodata,
@@ -307,133 +277,86 @@ object ZonalEngine {
         releases += (() => { p.unpersist(false); () })
         p
       } else partials0
-    val mainFidStats = ZonalStats.fidStats(partials)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    releases += (() => { mainFidStats.unpersist(false); () })
-    mainFidStats.count() // materialize: one kernel pass fills the cache
+    val fidRows =
+      try ZonalStats.collectFidStats(ZonalStats.fidStats(partials))
+      catch { case e: Throwable => release(releases.toSeq); throw e }
 
     val mainChunks =
       if (!collectVals) None
-      else Some(partials.select($"fid", $"vals").where(size($"vals") > 0))
+      else Some(partials.select(col("fid"), col("vals"))
+        .where(size(col("vals")) > 0))
     val tilesFor = fallbackTiles.getOrElse(
       (_: org.locationtech.jts.geom.Envelope) => tiles)
-    finishStats(spark, mainFidStats, mainChunks, zones, zonesDf, grid,
-      nodata, percentiles, exactPercentiles, tilesFor, histogram,
+    finishStats(spark, fidRows, mainChunks, zones, grid, nodata,
+      percentiles, exactPercentiles, tilesFor, histogram,
       releases.toSeq, tilesNonEmpty = fallbackHasTiles)
   }
 
-  /** The tail of the zonal pipeline, shared by the direct path above
-    * and the checkpointed path ([[graft.engine.Checkpoints]]): given
-    * merged per-FID stats (and optional percentile value chunks) from
-    * the kernel stage, run the unset-FID envelope fallback, the group
-    * rollup + percentiles, finalize, and order the output columns.
+  private def release(releases: Seq[() => Unit]): Unit =
+    releases.foreach { r =>
+      try r() catch { case scala.util.control.NonFatal(_) => () }
+    }
+
+  /** The tail of every zonal path — direct ([[run]]), checkpointed
+    * ([[graft.engine.Checkpoints]]) and incremental
+    * ([[runIncremental]]): given the kernel stage's per-FID stats as
+    * DRIVER-SIDE rows (and optional percentile value chunks), run the
+    * unset-FID envelope fallback, the group percentiles (the only
+    * Spark work left, [[ZonalStats.groupPercentiles]]) and the
+    * driver-side rollup ([[ZonalStats.groupStatsLocalFrame]]). The
+    * result is a local, materialized frame.
     *
     * @param zones   the SIMPLIFIED zone set the kernel ran against
     * @param tilesFor envelope-pruned tile scan for the fallback pass
     * @param releases caller-cached intermediates (persists/broadcasts)
-    *   backing `mainFidStats`/`mainChunks`; released synchronously once
-    *   the final (dimension-sized) result has materialized
+    *   backing `mainChunks`; released synchronously once the result
+    *   has materialized, or when any step fails
+    * @param tilesNonEmpty manifest-prune short-circuit: when the caller
+    *   can prove (from the driver-side file index, ~ms) that NO table
+    *   file intersects the unset zones' envelope, the fallback scan
+    *   would read zero tiles and produce zero partials — identical to
+    *   the zero-fill of the rollup — so it is skipped
     */
-  /** @param presentFidsKnown callers that already hold the per-FID
-    *   stats driver-side (the incremental path's local fold) pass the
-    *   fid set and skip the collect job — the per-increment finish
-    *   tail is fixed overhead the growth-path ratio pays every day. */
   private[graft] def finishStats(spark: SparkSession,
-      mainFidStats: DataFrame, mainChunks: Option[DataFrame],
-      zones: Seq[Zone], zonesDf: DataFrame, grid: RasterGrid,
+      fidRows: Seq[ZonalStats.FidStatRow], mainChunks: Option[DataFrame],
+      zones: Seq[Zone], grid: RasterGrid,
       nodata: Option[Double], percentiles: Seq[Double],
       exactPercentiles: Boolean,
       tilesFor: org.locationtech.jts.geom.Envelope => DataFrame,
       histogram: Option[(Double, Double, Int)],
       releases: Seq[() => Unit] = Nil,
       tilesNonEmpty: Option[
-        org.locationtech.jts.geom.Envelope => Boolean] = None,
-      presentFidsKnown: Option[Set[Long]] = None): DataFrame = {
+        org.locationtech.jts.geom.Envelope => Boolean] = None): DataFrame = {
     import spark.implicits._
-    val pKeys = percentileKeys(percentiles)
-    val collectVals = mainChunks.isDefined
+    val zoneGroups = zones.map(z => (z.fid, Option(z.group)))
+    val fbReleases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    try {
+      // ---- unset-FID envelope fallback (runner.py:697-811) ----
+      val presentFids = fidRows.iterator.map(_.fid).toSet
+      val unset = zones.filter(z => !presentFids.contains(z.fid))
+      val (fallbackRows, fallbackChunks) =
+        if (unset.isEmpty ||
+            tilesNonEmpty.exists(f => !f(Zone.totalEnvelope(unset))))
+          (Nil, None)
+        else runFallback(spark, tilesFor(Zone.totalEnvelope(unset)),
+          unset, grid, nodata, mainChunks.isDefined, fbReleases)
 
-    // ---- unset-FID envelope fallback (runner.py:697-811) ----
-    val tPh0 = System.nanoTime()
-    val presentFids = presentFidsKnown.getOrElse(
-      mainFidStats.select("fid").as[Long].collect().toSet)
-    val unset = zones.filter(z => !presentFids.contains(z.fid))
-    val tPh1 = System.nanoTime()
-    val (fallbackStats, fallbackChunks, fbReleases) =
-      if (unset.isEmpty) (None, None, Nil)
-      // manifest-prune short-circuit: when the caller can prove (from
-      // the driver-side file index, ~ms) that NO table file intersects
-      // the unset zones' envelope, the fallback scan would read zero
-      // tiles and produce zero partials — identical to the zero-stat
-      // fill groupStats applies downstream. Skipping the Spark jobs
-      // matters on the incremental path, where this consult is fixed
-      // per-increment overhead.
-      else if (tilesNonEmpty.exists(f => !f(Zone.totalEnvelope(unset))))
-        (None, None, Nil)
-      else runFallback(spark, tilesFor(Zone.totalEnvelope(unset)),
-        unset, grid, nodata, collectVals)
-    val tPh2 = System.nanoTime()
-    if (sys.env.get("SPARK_GRAFT_BENCH_PHASES").contains("1"))
-      System.err.println(f"PHASES finish_present=${(tPh1 - tPh0) / 1e9}%.3f" +
-        f" finish_fallback=${(tPh2 - tPh1) / 1e9}%.3f unset=${unset.size}")
-
-    val fidStatsAll = fallbackStats match {
-      case Some(fb) => mainFidStats.unionByName(fb)
-      case None => mainFidStats
-    }
-
-    val chunks = mainChunks.map { mc =>
-      val all = fallbackChunks match {
-        case Some(fc) => mc.unionByName(fc)
-        case None => mc
+      val pcts = mainChunks match {
+        case None => Map.empty[Option[String], IndexedSeq[java.lang.Double]]
+        case Some(mc) =>
+          val all = fallbackChunks.fold(mc)(mc.unionByName(_))
+          ZonalStats.groupPercentiles(
+            broadcast(zoneGroups.toDF("fid", "group"))
+              .join(all, Seq("fid")).select("group", "vals"),
+            percentiles.toArray, exactPercentiles, histogram)
       }
-      val withGroup = broadcast(zonesDf)
-        .join(all, Seq("fid")).select("group", "vals")
-      (withGroup, percentiles.toArray)
-    }
-
-    val g = ZonalStats.groupStats(fidStatsAll, zonesDf, chunks,
-      exactPercentiles, histogram)
-
-    // expand percentile array into pK columns; order columns
-    val withP =
-      if (pKeys.isEmpty) g
-      else pKeys.zipWithIndex.foldLeft(g) { case (df, (k, i)) =>
-        df.withColumn(k, element_at(col("pcts"), i + 1))
-      }.drop("pcts")
-    val ordered = withP.select("group", statFields(pKeys): _*)
-    // The rollup output is group-cardinality (dimension-sized — the
-    // same broadcastability assumption the whole engine makes), so
-    // materialize it NOW and synchronously drop every cached
-    // intermediate + broadcast this run pinned. Returning a lazy plan
-    // here would leave block-manager entries alive until the
-    // ContextCleaner happens to fire (under ParallelGC + a big heap:
-    // possibly never), which accumulates across reps in a long-lived
-    // session. The local result is also broadcast-friendly downstream.
-    // release in a finally: a failed collect (task failure, OOM) must
-    // not strand the persists/broadcasts in the block manager — that
-    // is exactly the accumulation this path exists to prevent
-    val rows =
-      try ordered.collect()
-      finally (releases ++ fbReleases).foreach { r =>
-        try r() catch { case scala.util.control.NonFatal(_) => () }
-      }
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), ordered.schema)
-  }
-
-  /** Zero-stats frame for the no-intersection path (runner.py:424-450). */
-  private def zeroStats(zonesDf: DataFrame, pKeys: Seq[String]): DataFrame = {
-    var df = zonesDf.select("group").distinct()
-      .withColumn("min", lit(null).cast("double"))
-      .withColumn("max", lit(null).cast("double"))
-      .withColumn("count", lit(0L))
-      .withColumn("nodata_count", lit(0L))
-      .withColumn("valid_count", lit(0L))
-      .withColumn("sum", lit(0.0))
-      .withColumn("stdev", lit(null).cast("double"))
-    pKeys.foreach(k => df = df.withColumn(k, lit(null).cast("double")))
-    df.select("group", statFields(pKeys): _*)
+      ZonalStats.groupStatsLocalFrame(spark, fidRows ++ fallbackRows,
+        zoneGroups, percentileKeys(percentiles), pcts)
+    // every Spark action of the run is done here, so the persists and
+    // broadcasts it pinned are dropped now, synchronously — also when a
+    // step failed: a long-lived session must not wait on the
+    // ContextCleaner (under ParallelGC + a big heap: possibly never)
+    } finally release(releases ++ fbReleases)
   }
 
   /** Envelope-window fallback for zones that captured no pixel:
@@ -444,8 +367,9 @@ object ZonalEngine {
     */
   private def runFallback(spark: SparkSession, tiles: DataFrame,
       unset: Seq[Zone], grid: RasterGrid, nodata: Option[Double],
-      collectVals: Boolean)
-      : (Option[DataFrame], Option[DataFrame], Seq[() => Unit]) = {
+      collectVals: Boolean,
+      releases: scala.collection.mutable.Buffer[() => Unit])
+      : (Seq[ZonalStats.FidStatRow], Option[DataFrame]) = {
     import spark.implicits._
 
     val windows: Array[(Long, Int, PixelWindow)] = (for {
@@ -456,7 +380,7 @@ object ZonalEngine {
         env.getMinY, env.getMaxY, grid.gt, grid.widthPx, grid.heightPx)
       if !win.isEmpty
     } yield (z.fid, part, win)).toArray
-    if (windows.isEmpty) return (None, None, Nil)
+    if (windows.isEmpty) return (Nil, None)
 
     // STRtree over the window pixel rects: the kernel probes the tile's
     // pixel range instead of scanning every window linearly — fallback
@@ -473,7 +397,6 @@ object ZonalEngine {
     val gridB = grid
     val nodataB = nodata
     val cvB = collectVals
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     releases += (() => bcWin.destroy())
 
     val winPartials0 = tiles.select("image_id", "bytes", "fmt")
@@ -498,24 +421,21 @@ object ZonalEngine {
       .collect()
 
     // last-part-wins merge (runner.py:783-806 uses `=`, not `+=`)
-    val byFid = agg.groupBy(_.getLong(0))
-    val rows = byFid.map { case (fid, parts) =>
+    val rows = agg.groupBy(_.getLong(0)).map { case (fid, parts) =>
       val last = parts.maxBy(_.getInt(1))
       val cnt = last.getLong(2); val nd = last.getLong(3)
-      val valid = cnt - nd
-      if (valid == 0)
-        (fid, cnt, nd, 0.0, 0.0, 0.0, 0.0) // runner.py:790-794
+      if (cnt - nd == 0)
+        ZonalStats.FidStatRow(fid, cnt, nd, 0.0, 0.0, 0.0, 0.0) // runner.py:790-794
       else
-        (fid, cnt, nd, last.getDouble(4), last.getDouble(5),
-          last.getDouble(6), last.getDouble(7))
+        ZonalStats.FidStatRow(fid, cnt, nd, last.getDouble(4),
+          last.getDouble(5), last.getDouble(6), last.getDouble(7))
     }.toSeq
-    val fbStats = rows.toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
 
     val fbChunks =
       if (!collectVals) None
       else Some(winPartials.select($"fid", $"vals")
         .where(size($"vals") > 0))
-    (Some(fbStats), fbChunks, releases.toSeq)
+    (rows, fbChunks)
   }
 
   /** Per-tile kernel of the fallback pass: every pixel of the tile

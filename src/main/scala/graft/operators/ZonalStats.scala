@@ -449,149 +449,105 @@ object ZonalStats {
       .where(col("cnt") > 0)
   }
 
-  /** FID→group rollup + finalize (`runner.py:848-917`):
-    * sums/counts add unconditionally; min/max merge only from fids
-    * with valid_count > 0; population stdev from sum/sumsq with
-    * variance clamped at 0; every group present in the zone table
-    * appears (zero-filled) even with no pixels.
+  /** Group percentiles — the one part of the rollup that stays in
+    * Spark, because it needs every raw value of a group. `chunks` is
+    * the (group, vals) stream; the result maps each group with at
+    * least one value to its percentile array (in `ps` order).
     *
-    * `zonesDf` is (fid, group) — broadcast by size. `chunks` is the
-    * optional (fid, vals) stream feeding exact group percentiles.
-    */
-  def groupStats(fidStatsDf: DataFrame, zonesDf: DataFrame,
-      chunks: Option[(DataFrame, Array[Double])],
-      exactPercentiles: Boolean = true,
-      histogram: Option[(Double, Double, Int)] = None): DataFrame = {
-    // Inner join fid→group: zones broadcast (BuildRight is supported
-    // for inner joins); fids with no stats are restored by the
-    // zero-fill below, which adds exactly the zeros the reference's
-    // defaultdict touch adds (runner.py:813-815) — sums/counts are
-    // unaffected and min/max are gated on valid_count anyway.
-    val joined = fidStatsDf.join(broadcast(zonesDf), Seq("fid"))
-    val validFid = col("cnt") - col("nodata")
-    var g = joined.groupBy("group").agg(
-      sum(col("cnt")).as("count"),
-      sum(col("nodata")).as("nodata_count"),
-      sum(col("sum")).as("sum"),
-      sum(col("sumsq")).as("sumsq"),
-      min(when(validFid > 0, col("mn"))).as("min"),
-      max(when(validFid > 0, col("mx"))).as("max"))
-
-    chunks.foreach { case (chunkDf, ps) =>
-      // rename the join key: both frames descend from zonesDf's group
-      // attribute, and a same-lineage <=> join resolves ambiguously.
-      // null-safe join: a NULL group value is a real group
-      // (runner.py:981-985).
-      val pcts = (if (exactPercentiles) {
-        val agg = udaf(new PercentileAgg(ps))
-        chunkDf.groupBy("group").agg(agg(col("vals")).as("pcts"))
-      } else if (histogram.isDefined) {
-        // deterministic mergeable scale path: fixed-bin histogram.
-        // Pixel rows fold into (group, bin) counts map-side (hash agg
-        // partials), so only bins-per-group rows shuffle; the result
-        // is order-independent and exactly replicable in external SQL
-        // (unlike GK, whose summary depends on merge order). Error
-        // bound: |est − exact| <= binWidth (midpoint rule).
-        val (lo, hi, bins) = histogram.get
-        val w = (hi - lo) / bins
-        import org.apache.spark.sql.expressions.Window
-        val binned = chunkDf
-          .select(col("group"), explode(col("vals")).as("v"))
-          .select(col("group"),
-            least(lit(bins - 1), greatest(lit(0),
-              floor((col("v").cast("double") - lo) / w).cast("int")))
-              .as("bin"))
-          .groupBy("group", "bin").agg(count(lit(1)).as("c"))
-        val wCum = Window.partitionBy("group").orderBy("bin")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wAll = Window.partitionBy("group")
-        val withCum = binned
-          .withColumn("cum", sum("c").over(wCum))
-          .withColumn("n", sum("c").over(wAll))
-        // percentile = midpoint of the bin holding the
-        // ceil(p·n/100)-th valid value (1-based, clamped to >= 1)
-        val aggsP = ps.zipWithIndex.map { case (p, i) =>
-          val rank = greatest(lit(1.0),
-            ceil(lit(p) * col("n") / 100.0))
-          min(when(col("cum") >= rank,
-            lit(lo) + (col("bin") + lit(0.5)) * w)).as(s"h_$i")
-        }
-        withCum.groupBy("group").agg(aggsP.head, aggsP.tail: _*)
-          .select(col("group"),
-            array(ps.indices.map(i => col(s"h_$i")): _*).as("pcts"))
-      } else {
-        // scale path: explode to pixel rows; Spark's partial
-        // aggregation folds them into per-partition Greenwald-Khanna
-        // summaries map-side, so no group concentrates raw values on
-        // one reducer
-        val fractions = array(ps.map(p => lit(p / 100.0)): _*)
-        chunkDf.select(col("group"), explode(col("vals")).as("v"))
-          .groupBy("group")
-          .agg(percentile_approx(col("v").cast("double"), fractions,
-            lit(10000)).as("pcts"))
-      }).withColumnRenamed("group", "p_group")
-      g = g.join(pcts, col("group") <=> col("p_group"), "left_outer")
-        .drop("p_group")
+    * The exact path hash-spreads the rows on `group` over
+    * [[Lsh.spreadBy]]'s width first: an explicit-width exchange that
+    * AQE does not coalesce, so the sort-heavy per-group finish runs on
+    * one task per group bucket instead of being folded into a single
+    * task. A group's raw values meet on one task there anyway; the
+    * sketch paths keep folding map-side before their exchange.
+    *
+    * @param exactPercentiles true = exact numpy-parity percentiles
+    *   ([[PercentileAgg]]); false = the fixed-bin `histogram` when
+    *   given, else Spark's Greenwald-Khanna `percentile_approx`. */
+  def groupPercentiles(chunks: DataFrame, ps: Array[Double],
+      exactPercentiles: Boolean,
+      histogram: Option[(Double, Double, Int)])
+      : Map[Option[String], IndexedSeq[java.lang.Double]] = {
+    val pcts = if (exactPercentiles) {
+      val agg = udaf(new PercentileAgg(ps))
+      Lsh.spreadBy(chunks, col("group"))
+        .groupBy("group").agg(agg(col("vals")).as("pcts"))
+    } else if (histogram.isDefined) {
+      // deterministic mergeable scale path: fixed-bin histogram.
+      // Pixel rows fold into (group, bin) counts map-side (hash agg
+      // partials), so only bins-per-group rows shuffle; the result
+      // is order-independent and exactly replicable in external SQL
+      // (unlike GK, whose summary depends on merge order). Error
+      // bound: |est − exact| <= binWidth (midpoint rule).
+      val (lo, hi, bins) = histogram.get
+      val w = (hi - lo) / bins
+      import org.apache.spark.sql.expressions.Window
+      val binned = chunks
+        .select(col("group"), explode(col("vals")).as("v"))
+        .select(col("group"),
+          least(lit(bins - 1), greatest(lit(0),
+            floor((col("v").cast("double") - lo) / w).cast("int")))
+            .as("bin"))
+        .groupBy("group", "bin").agg(count(lit(1)).as("c"))
+      val wCum = Window.partitionBy("group").orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wAll = Window.partitionBy("group")
+      val withCum = binned
+        .withColumn("cum", sum("c").over(wCum))
+        .withColumn("n", sum("c").over(wAll))
+      // percentile = midpoint of the bin holding the
+      // ceil(p·n/100)-th valid value (1-based, clamped to >= 1)
+      val aggsP = ps.toSeq.zipWithIndex.map { case (p, i) =>
+        val rank = greatest(lit(1.0),
+          ceil(lit(p) * col("n") / 100.0))
+        min(when(col("cum") >= rank,
+          lit(lo) + (col("bin") + lit(0.5)) * w)).as(s"h_$i")
+      }
+      withCum.groupBy("group").agg(aggsP.head, aggsP.tail: _*)
+        .select(col("group"),
+          array(ps.indices.map(i => col(s"h_$i")): _*).as("pcts"))
+    } else {
+      // scale path: explode to pixel rows; Spark's partial
+      // aggregation folds them into per-partition Greenwald-Khanna
+      // summaries map-side, so no group concentrates raw values on
+      // one reducer
+      val fractions = array(ps.toSeq.map(p => lit(p / 100.0)): _*)
+      chunks.select(col("group"), explode(col("vals")).as("v"))
+        .groupBy("group")
+        .agg(percentile_approx(col("v").cast("double"), fractions,
+          lit(10000)).as("pcts"))
     }
-
-    // zero-fill: every group in the zone table appears (runner.py:424-450,
-    // 813-815). Both sides are group-cardinality small. zonesDf is a
-    // dimension-sized LOCAL relation in every engine path (zones are
-    // broadcastable by the engine-wide assumption), so the distinct
-    // group set folds on the driver — ConvertToLocalRelation makes the
-    // collect job-free, where `.distinct()` cost an exchange+agg job
-    // round on every zonal run (r8; first-seen order preserved like
-    // the distinct it replaces — row order is not part of the result
-    // contract anyway).
-    val spark = fidStatsDf.sparkSession
-    val groupRows = zonesDf.select("group").collect()
-      .map(r => if (r.isNullAt(0)) null else r.getString(0)).distinct
-    val groupsDf = spark.createDataFrame(
-      java.util.Arrays.asList(groupRows.map(g =>
-        org.apache.spark.sql.Row(g: Any)): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("group",
-          org.apache.spark.sql.types.StringType, nullable = true))))
-    val gRen = g.withColumnRenamed("group", "g_group")
-    val filled = groupsDf.join(gRen, col("group") <=> col("g_group"),
-        "left_outer")
-      .drop("g_group")
-      .withColumn("count", coalesce(col("count"), lit(0L)))
-      .withColumn("nodata_count", coalesce(col("nodata_count"), lit(0L)))
-      .withColumn("sum", coalesce(col("sum"), lit(0.0)))
-      .withColumn("sumsq", coalesce(col("sumsq"), lit(0.0)))
-
-    val valid = col("count") - col("nodata_count")
-    val mean = col("sum") / valid
-    val variance = greatest(col("sumsq") / valid - mean * mean, lit(0.0))
-    filled.withColumn("valid_count", valid)
-      .withColumn("stdev", when(valid > 0, sqrt(variance)))
-      .withColumn("min", when(valid > 0, col("min")))
-      .withColumn("max", when(valid > 0, col("max")))
-      .drop("sumsq")
+    pcts.collect().iterator.map { r =>
+      Option(r.getString(0)) ->
+        r.getSeq[java.lang.Double](1).toIndexedSeq
+    }.toMap
   }
 
-  /** [[groupStats]] ON THE DRIVER for the no-percentile case — the
-    * incremental growth path's rollup (r8). Per-FID stats and the
-    * zone table are both dimension-sized and, on the incremental
-    * path, already live driver-side; routing them through the Spark
-    * rollup cost 3-4 job rounds (~0.3 s) of pure fixed overhead per
-    * increment — the single largest slice of the daily-append wall
-    * after the delta decode itself.
+  /** FID→group rollup + finalize (`runner.py:848-917`) ON THE DRIVER —
+    * the one rollup of every zonal path (direct, checkpointed,
+    * incremental). Per-FID stats and the zone table are both
+    * dimension-sized (the engine-wide broadcastability assumption), so
+    * the rollup is driver work: in Spark it would add job rounds of
+    * shuffle-width exchanges over local tables to every run.
     *
-    * Semantics mirror [[groupStats]] operation for operation, in the
-    * SAME fold order the Spark path uses (rows fid-sorted — the
-    * [[fidStatsFrame]] layout — accumulated per group in encounter
-    * order; min/max use Spark's DoubleType ordering via
-    * `java.lang.Double.compare`): inner fid→group join, sums fold
-    * unconditionally, min/max only from fids with valid_count>0,
-    * zero-fill for every zone-table group (first-seen order),
-    * population stdev with variance clamped at 0, min/max/stdev NULL
-    * at valid_count==0. Equality with the Spark rollup — values,
-    * schema, row order — is pinned by GroupStatsLocalSpec on
-    * randomized fractional inputs. */
+    * Semantics, in the fold order of a Spark rollup over fid-sorted
+    * rows: inner fid→group join, sums fold unconditionally, min/max
+    * only from fids with valid_count>0 (Spark's DoubleType ordering via
+    * `java.lang.Double.compare`-style NaN-safe comparison), zero-fill
+    * for every zone-table group (first-seen order), population stdev
+    * with variance clamped at 0, min/max/stdev NULL at valid_count==0.
+    * Equality with the Spark algebraic rollup — values, schema, row
+    * order — is pinned by GroupStatsLocalSpec on randomized fractional
+    * inputs.
+    *
+    * @param pKeys percentile column names appended after the scalar
+    *   stats
+    * @param pcts [[groupPercentiles]] output; groups absent from it get
+    *   NULL percentiles (`runner.py:891-904`) */
   def groupStatsLocalFrame(spark: SparkSession,
-      rows: Seq[FidStatRow], zones: Seq[(Long, Option[String])])
+      rows: Seq[FidStatRow], zones: Seq[(Long, Option[String])],
+      pKeys: Seq[String] = Nil,
+      pcts: Map[Option[String], IndexedSeq[java.lang.Double]] = Map.empty)
       : DataFrame = {
     import org.apache.spark.sql.types._
     val groupOf: Map[Long, Option[String]] = zones.map(z => z._1 -> z._2).toMap
@@ -625,11 +581,11 @@ object ZonalStats {
         }
       }
     }
-    // zero-fill: every group of the zone table, first-seen order —
-    // the same order groupStats' groupsDf left-join emits
+    // zero-fill: every group of the zone table, first-seen order
     val groupOrder = scala.collection.mutable.LinkedHashSet
       .empty[Option[String]]
     zones.foreach(z => groupOrder += z._2)
+    val noPcts = IndexedSeq.fill[java.lang.Double](pKeys.size)(null)
     val outRows: Seq[org.apache.spark.sql.Row] =
       groupOrder.iterator.map { g =>
         val a = accs.getOrElse(g, new GAcc)
@@ -642,8 +598,8 @@ object ZonalStats {
               if (a.mxSet) Double.box(a.mx) else null,
               Double.box(math.sqrt(variance)))
           } else (null, null, null)
-        org.apache.spark.sql.Row(g.orNull, mnO, mxO, a.count, a.nodata,
-          valid, a.sum, sdO)
+        org.apache.spark.sql.Row.fromSeq(Seq(g.orNull, mnO, mxO, a.count,
+          a.nodata, valid, a.sum, sdO) ++ pcts.getOrElse(g, noPcts))
       }.toSeq
     // schema matches the Spark rollup's exactly (coalesce over a
     // literal default makes the counters/sum non-nullable there)
@@ -655,7 +611,8 @@ object ZonalStats {
       StructField("nodata_count", LongType, nullable = false),
       StructField("valid_count", LongType, nullable = false),
       StructField("sum", DoubleType, nullable = false),
-      StructField("stdev", DoubleType, nullable = true)))
+      StructField("stdev", DoubleType, nullable = true)) ++
+      pKeys.map(StructField(_, DoubleType, nullable = true)))
     spark.createDataFrame(
       java.util.Arrays.asList(outRows: _*), schema)
   }

@@ -103,6 +103,96 @@ class JobCsvSpec extends SparkSpec {
       run1Ids(nChunks - 1))
   }
 
+  /** Per-raster Spark-job ceiling for a checkpointed percentile job:
+    * one kernel job per chunk, two for the per-FID merge, two for the
+    * group percentiles, plus a share of the job's single vector load.
+    * See CHANGES.md for how the figure was derived. */
+  private val MaxJobsPerRaster = 10
+
+  private def percentileJob(work: java.nio.file.Path, stems: Seq[String],
+      numFiles: Int): Config.JobSpec = {
+    Seq(0, 1).zip(stems).foreach { case (v, stem) =>
+      TileTable.write(spark, Synth.tiles(spark, grid, "raw", v), grid,
+        Some(-9999.0), s"$work/$stem", cellLevel = 8, numFiles = numFiles)
+    }
+    val vecDir = Files.createDirectory(work.resolve("vec"))
+    ZoneStore.write(spark, Fixtures.zonesBasic(grid), "grp_field",
+      s"$vecDir/zones.parquet")
+    Config.JobSpec(
+      tag = "t1", aggVector = s"$vecDir/zones.parquet",
+      aggLayer = "zones", aggField = "grp_field",
+      rasterPaths = stems.map(s => s"$work/$s"),
+      operations = Seq("avg", "stdev", "valid_count", "total_count",
+        "p5", "p50", "p95"),
+      rowColOrder = "agg_field,base_raster", workdir = s"$work/wd",
+      outputCsv = s"$work/out.csv")
+  }
+
+  test("checkpointed percentile job: one job per chunk, bounded jobs " +
+      "per raster, no cache left behind, oracle CSV") {
+    val work = Files.createTempDirectory("graft-job-jobs")
+    val stems = Seq("rasterA", "rasterB")
+    val job = percentileJob(work, stems, numFiles = 3)
+    Caches.drain(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val out = try {
+      val o = ZonalJob.run(spark, job, timestamp = None)
+      org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+      o
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val perRaster = jobs.get.toDouble / stems.size
+    assert(perRaster <= MaxJobsPerRaster,
+      s"${jobs.get} Spark jobs for ${stems.size} rasters")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      spark.sparkContext.getPersistentRDDs.values.map(_.name))
+    assert(Caches.pending(spark) === 0)
+    // every chunk recorded its totals from the write itself
+    val ckpt = ZonalJob.ckptDirFor(job, s"$work/rasterA")
+    val lineage = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(
+        Paths.get(Checkpoints.chunkDir(ckpt, 0), "lineage.json")))
+    assert(lineage.get("partialRows").asLong() > 0)
+    assert(lineage.get("pixels").asLong() > 0)
+    val exp = oracleCsv(job.rowColOrder, stems, Seq(0, 1), job.percentiles)
+      .mkString("", "\r\n", "\r\n")
+    assert(Files.readString(Paths.get(out)) === exp)
+  }
+
+  test("percentile crash-resume: a chunk whose parquet landed without " +
+      "its lineage is recomputed; CSV byte-identical") {
+    val work = Files.createTempDirectory("graft-job-pct-resume")
+    val job = percentileJob(work, Seq("rasterA"), numFiles = 4)
+    val csv1 = Files.readString(Paths.get(ZonalJob.run(spark, job, None)))
+    val ckpt = ZonalJob.ckptDirFor(job, s"$work/rasterA")
+    val nChunks = Checkpoints.chunkFiles(
+      TileTable.open(s"$work/rasterA").manifest.files,
+      Checkpoints.DefaultMaxChunks).size
+    assert(nChunks >= 2)
+    val run1Ids = (0 until nChunks).map(Checkpoints.lineageRunId(ckpt, _))
+    // crash between the partials write and the lineage write
+    val torn = nChunks - 1
+    assert(Files.exists(Paths.get(Checkpoints.chunkDir(ckpt, torn),
+      "partials", "_SUCCESS")))
+    Files.delete(Paths.get(Checkpoints.chunkDir(ckpt, torn),
+      "lineage.json"))
+    Files.deleteIfExists(Paths.get(job.outputCsv))
+    val csv2 = Files.readString(Paths.get(ZonalJob.run(spark, job, None)))
+    assert(csv2 === csv1, "resumed CSV differs from the original run")
+    (0 until torn).foreach { i =>
+      assert(Checkpoints.lineageRunId(ckpt, i) === run1Ids(i), s"chunk $i")
+    }
+    val redone = Checkpoints.lineageRunId(ckpt, torn)
+    assert(redone.isDefined && redone != run1Ids(torn),
+      "the chunk without lineage was not recomputed")
+  }
+
   test("job-level memoization: unchanged inputs skip, changed inputs rerun") {
     val work = Files.createTempDirectory("graft-job-memo")
     TileTable.write(spark, Synth.tiles(spark, grid, "raw", 0), grid,

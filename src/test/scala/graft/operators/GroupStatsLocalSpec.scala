@@ -1,17 +1,61 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 
-/** Pins `ZonalStats.groupStatsLocalFrame` (the r8 driver-side rollup
-  * the incremental path uses when the fallback is provably empty)
-  * against the Spark rollup (`groupStats` + the finishStats column
-  * ordering) — values (bitwise doubles), schema (names, types,
-  * nullability), and row order, on randomized FRACTIONAL inputs so
-  * float fold-order differences cannot hide behind integer-exact
-  * sums.
+/** Pins `ZonalStats.groupStatsLocalFrame` (the driver-side rollup
+  * every zonal path finishes with) against a Spark algebraic rollup
+  * (the engine's former `groupStats`, kept here as the reference, +
+  * the finishStats column ordering) — values (bitwise doubles), schema
+  * (names, types, nullability), and row order, on randomized
+  * FRACTIONAL inputs so float fold-order differences cannot hide
+  * behind integer-exact sums.
   */
 class GroupStatsLocalSpec extends SparkSpec {
+
+  /** Spark FID→group rollup + finalize (`runner.py:848-917`):
+    * sums/counts add unconditionally; min/max merge only from fids
+    * with valid_count > 0; population stdev from sum/sumsq with
+    * variance clamped at 0; every group present in the zone table
+    * appears (zero-filled) even with no pixels. */
+  private def groupStats(fidStatsDf: DataFrame,
+      zonesDf: DataFrame): DataFrame = {
+    val joined = fidStatsDf.join(broadcast(zonesDf), Seq("fid"))
+    val validFid = col("cnt") - col("nodata")
+    val g = joined.groupBy("group").agg(
+      sum(col("cnt")).as("count"),
+      sum(col("nodata")).as("nodata_count"),
+      sum(col("sum")).as("sum"),
+      sum(col("sumsq")).as("sumsq"),
+      min(when(validFid > 0, col("mn"))).as("min"),
+      max(when(validFid > 0, col("mx"))).as("max"))
+    val spark = fidStatsDf.sparkSession
+    val groupRows = zonesDf.select("group").collect()
+      .map(r => if (r.isNullAt(0)) null else r.getString(0)).distinct
+    val groupsDf = spark.createDataFrame(
+      java.util.Arrays.asList(groupRows.map(g =>
+        org.apache.spark.sql.Row(g: Any)): _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("group",
+          org.apache.spark.sql.types.StringType, nullable = true))))
+    val gRen = g.withColumnRenamed("group", "g_group")
+    val filled = groupsDf.join(gRen, col("group") <=> col("g_group"),
+        "left_outer")
+      .drop("g_group")
+      .withColumn("count", coalesce(col("count"), lit(0L)))
+      .withColumn("nodata_count", coalesce(col("nodata_count"), lit(0L)))
+      .withColumn("sum", coalesce(col("sum"), lit(0.0)))
+      .withColumn("sumsq", coalesce(col("sumsq"), lit(0.0)))
+    val valid = col("count") - col("nodata_count")
+    val mean = col("sum") / valid
+    val variance = greatest(col("sumsq") / valid - mean * mean, lit(0.0))
+    filled.withColumn("valid_count", valid)
+      .withColumn("stdev", when(valid > 0, sqrt(variance)))
+      .withColumn("min", when(valid > 0, col("min")))
+      .withColumn("max", when(valid > 0, col("max")))
+      .drop("sumsq")
+  }
 
   private def sparkRollup(rows: Seq[ZonalStats.FidStatRow],
       zones: Seq[(Long, Option[String])])
@@ -19,7 +63,7 @@ class GroupStatsLocalSpec extends SparkSpec {
     import spark.implicits._
     val df = ZonalStats.fidStatsFrame(spark, rows)
     val zonesDf = zones.toDF("fid", "group")
-    val g = ZonalStats.groupStats(df, zonesDf, None)
+    val g = groupStats(df, zonesDf)
     val ordered = g.select("group", ZonalEngine.statFields(Nil): _*)
     (ordered.schema, ordered.collect())
   }
