@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped registry for cached intermediates whose consumers
   * materialize OUTSIDE the operator that cached them (e.g. the
@@ -54,6 +54,15 @@ object Caches {
       q.add(release)
       while (q.size() > MaxPending) run(q.poll())
     }
+
+  /** Persist `df` (default storage level) and register its release
+    * against its session — the one persist an operator hands to the
+    * registry. Returns `df`. */
+  def persist(df: DataFrame): DataFrame = {
+    df.persist()
+    register(df.sparkSession, () => { df.unpersist(false); () })
+    df
+  }
 
   /** Release everything registered against `spark`. */
   def drain(spark: SparkSession): Unit = reg.synchronized {

@@ -9,7 +9,7 @@ import graft.sources.{TileFileStat, TileManifest, TileTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** Chunked, resumable zonal-stats execution — the engine's answer to
   * the reference's TaskGraph memoization (`/root/reference/
@@ -63,6 +63,9 @@ object Checkpoints {
   /** Default chunk-count cap — shared with verification code that
     * re-derives chunk indices (keep in sync by REFERENCE, not copy). */
   val DefaultMaxChunks = 64
+
+  /** Chunk jobs kept in flight at once. */
+  private val ChunkConcurrency = 12
 
   def chunkDir(ckptDir: String, i: Int): String = f"$ckptDir/chunk=$i%05d"
 
@@ -196,8 +199,7 @@ object Checkpoints {
     // bounded pool keeps several in flight so per-job fixed costs
     // (scheduling, parquet commit) overlap with other chunks' compute
     // instead of serializing the cluster behind the driver loop.
-    val concurrency = math.min(math.max(1, chunks.size), math.max(1,
-      sys.env.getOrElse("GRAFT_CKPT_CONCURRENCY", "12").toInt))
+    val concurrency = math.min(math.max(1, chunks.size), ChunkConcurrency)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
 
     def runChunk(files: Seq[TileFileStat], i: Int): Unit = {
@@ -318,41 +320,45 @@ object Checkpoints {
     }
   }
 
-  /** Chunk stats sidecar (stats.json, written atomically BEFORE
-    * lineage.json): doubles stored as raw IEEE-754 bits so ±Infinity
-    * sentinels and exact values survive the JSON round-trip. */
-  private def writeChunkStats(dir: String,
-      stats: Seq[FidStatRow]): Unit = {
-    val o = mapper.createArrayNode()
-    stats.foreach { s =>
-      val n = o.addObject()
+  /** The per-FID stat rows as a JSON array — the one row format of the
+    * chunk `stats.json` and the `fidstats.json` sidecar: doubles as
+    * raw IEEE-754 bits, so ±Infinity sentinels and exact values survive
+    * the round-trip. */
+  private def putFidRows(arr: com.fasterxml.jackson.databind.node.ArrayNode,
+      rows: Seq[FidStatRow]): Unit =
+    rows.foreach { s =>
+      val n = arr.addObject()
       n.put("fid", s.fid); n.put("cnt", s.cnt); n.put("nodata", s.nodata)
       n.put("mn", java.lang.Double.doubleToRawLongBits(s.mn))
       n.put("mx", java.lang.Double.doubleToRawLongBits(s.mx))
       n.put("sum", java.lang.Double.doubleToRawLongBits(s.sum))
       n.put("sumsq", java.lang.Double.doubleToRawLongBits(s.sumsq))
     }
-    Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, ".stats.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(o))
-    Files.move(tmp, Paths.get(dir, "stats.json"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
 
-  private def readChunkStats(dir: String): Seq[FidStatRow] = {
-    val p = Paths.get(dir, "stats.json")
-    val arr = mapper.readTree(Files.readString(p))
+  private def fidRowsOf(
+      arr: com.fasterxml.jackson.databind.JsonNode): Seq[FidStatRow] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[FidStatRow]
+    def bits(n: com.fasterxml.jackson.databind.JsonNode, k: String) =
+      java.lang.Double.longBitsToDouble(n.get(k).asLong())
     arr.forEach { n =>
       out += FidStatRow(n.get("fid").asLong(), n.get("cnt").asLong(),
-        n.get("nodata").asLong(),
-        java.lang.Double.longBitsToDouble(n.get("mn").asLong()),
-        java.lang.Double.longBitsToDouble(n.get("mx").asLong()),
-        java.lang.Double.longBitsToDouble(n.get("sum").asLong()),
-        java.lang.Double.longBitsToDouble(n.get("sumsq").asLong()))
+        n.get("nodata").asLong(), bits(n, "mn"), bits(n, "mx"),
+        bits(n, "sum"), bits(n, "sumsq"))
     }
     out.toSeq
   }
+
+  /** Chunk stats sidecar (stats.json, written atomically BEFORE
+    * lineage.json). */
+  private def writeChunkStats(dir: String,
+      stats: Seq[FidStatRow]): Unit = {
+    val o = mapper.createArrayNode()
+    putFidRows(o, stats)
+    AtomicFile.write(Paths.get(dir, "stats.json"), mapper.writeValueAsString(o))
+  }
+
+  private def readChunkStats(dir: String): Seq[FidStatRow] =
+    fidRowsOf(mapper.readTree(Files.readString(Paths.get(dir, "stats.json"))))
 
   /** Full resumable zonal run: chunked partials → merge → the shared
     * engine tail (fallback pass, rollup, exact percentiles,
@@ -415,24 +421,9 @@ object Checkpoints {
     // folding a NEW table's CDC window into an OLD table's stats
     // must fail closed (readers compare this against the live chain)
     o.put("manifest_fp", manifestFp)
-    val arr = o.putArray("fids")
-    fidStats.select("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
-      .collect().sortBy(_.getLong(0)).foreach { r =>
-        val n = arr.addObject()
-        n.put("fid", r.getLong(0)); n.put("cnt", r.getLong(1))
-        n.put("nodata", r.getLong(2))
-        n.put("mn", java.lang.Double.doubleToRawLongBits(r.getDouble(3)))
-        n.put("mx", java.lang.Double.doubleToRawLongBits(r.getDouble(4)))
-        n.put("sum", java.lang.Double.doubleToRawLongBits(r.getDouble(5)))
-        n.put("sumsq",
-          java.lang.Double.doubleToRawLongBits(r.getDouble(6)))
-      }
-    val p = Paths.get(path)
-    Files.createDirectories(p.getParent)
-    val tmp = Paths.get(path + ".tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(o))
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    putFidRows(o.putArray("fids"),
+      ZonalStats.collectFidStats(fidStats).sortBy(_.fid))
+    AtomicFile.write(Paths.get(path), mapper.writeValueAsString(o))
   }
 
   /** Reload a [[writeFidStatsSidecar]] file → (stats frame, table
@@ -440,26 +431,14 @@ object Checkpoints {
     * absent/unreadable. */
   def readFidStatsSidecar(spark: SparkSession, path: String)
       : Option[(org.apache.spark.sql.DataFrame, Int, String)] = {
-    import spark.implicits._
     val p = Paths.get(path)
     if (!Files.exists(p)) None
     else try {
       val j = mapper.readTree(Files.readString(p))
       val v = j.get("version").asInt()
       val fp = Option(j.get("manifest_fp")).map(_.asText()).getOrElse("")
-      val rows = scala.collection.mutable
-        .ArrayBuffer.empty[(Long, Long, Long, Double, Double, Double,
-          Double)]
-      j.get("fids").forEach { n =>
-        rows += ((n.get("fid").asLong(), n.get("cnt").asLong(),
-          n.get("nodata").asLong(),
-          java.lang.Double.longBitsToDouble(n.get("mn").asLong()),
-          java.lang.Double.longBitsToDouble(n.get("mx").asLong()),
-          java.lang.Double.longBitsToDouble(n.get("sum").asLong()),
-          java.lang.Double.longBitsToDouble(n.get("sumsq").asLong())))
-      }
-      Some((rows.toSeq
-        .toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq"), v, fp))
+      Some((ZonalStats.fidStatsFrame(spark, fidRowsOf(j.get("fids"))), v,
+        fp))
     } catch { case _: Exception => None }
   }
 
@@ -503,12 +482,8 @@ object Checkpoints {
         po.put("pixels", px)
       }
     }
-    Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, ".lineage.json.tmp")
-    Files.writeString(tmp,
+    AtomicFile.write(Paths.get(dir, "lineage.json"),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o))
-    Files.move(tmp, Paths.get(dir, "lineage.json"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   private def lineageField(ckptDir: String, i: Int,

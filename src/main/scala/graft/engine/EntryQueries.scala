@@ -986,12 +986,8 @@ SELECT image_id, dhash FROM dh"""
   /** dHash per tile with an exact `~dup` copy of every tile — the
     * ONE fixture shared by the image near-dup and cluster queries
     * (hash-once-persist: dhash feeds several plan branches). */
-  private def persistedDhash(spark: SparkSession): DataFrame = {
-    val withDh = imageDhash(spark).persist()
-    graft.engine.Caches.register(spark,
-      () => { withDh.unpersist(false); () })
-    withDh
-  }
+  private def persistedDhash(spark: SparkSession): DataFrame =
+    graft.engine.Caches.persist(imageDhash(spark))
 
   private def dupDoubledDhash(spark: SparkSession): DataFrame = {
     val withDh = persistedDhash(spark)

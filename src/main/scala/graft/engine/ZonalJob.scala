@@ -18,6 +18,9 @@ object ZonalJob {
 
   type GroupStats = Map[Option[String], Map[String, Option[Any]]]
 
+  /** Rasters of one job run at once. */
+  private val RasterConcurrency = 2
+
   /** Run one raster slice → per-group stat maps keyed like the
     * reference dicts (stat-field insertion order preserved by the
     * field list, runner.py:849-861,917).
@@ -126,15 +129,9 @@ object ZonalJob {
     * "did the daily run really only scan the delta?") checks. */
   private def writeIncrMarker(ckptDir: String, fromV: Int, toV: Int,
       addedFiles: Int, removalSteps: Int): Unit = {
-    val p = Paths.get(ckptDir, "incr-applied.json")
-    Files.createDirectories(p.getParent)
-    val tmp = Paths.get(ckptDir, ".incr-applied.json.tmp")
-    Files.writeString(tmp,
+    AtomicFile.write(Paths.get(ckptDir, "incr-applied.json"),
       s"""{"fromVersion":$fromV,"toVersion":$toV,""" +
         s""""addedFiles":$addedFiles,"removalSteps":$removalSteps}""")
-    Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Parsed [[writeIncrMarker]] payload, None if the last run of the
@@ -143,9 +140,9 @@ object ZonalJob {
     val p = Paths.get(ckptDir, "incr-applied.json")
     if (!Files.exists(p)) None
     else {
-      val t = Files.readString(p)
-      def i(k: String) = s""""$k":(-?\\d+)""".r
-        .findFirstMatchIn(t).get.group(1).toInt
+      val j = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Files.readString(p))
+      def i(k: String) = j.get(k).asInt()
       Some((i("fromVersion"), i("toVersion"), i("addedFiles"),
         i("removalSteps")))
     }
@@ -338,8 +335,7 @@ object ZonalJob {
     // own checkpoint dir under the job workdir, so a crashed run
     // resumes at chunk granularity (clean_working_dir=False in the
     // reference job path, runner.py:962 — scratch is kept).
-    val conc = math.min(math.max(1, job.rasterPaths.size), math.max(1,
-      sys.env.getOrElse("GRAFT_JOB_RASTER_CONCURRENCY", "2").toInt))
+    val conc = math.min(math.max(1, job.rasterPaths.size), RasterConcurrency)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
     val stats: Map[String, GroupStats] =
       try {
@@ -364,11 +360,7 @@ object ZonalJob {
     // atomic CSV publish (temp + move), then the certificate — a
     // reader/memo check can only ever observe (complete CSV, no meta)
     // or (complete CSV, matching meta)
-    val tmp = Paths.get(out + ".tmp")
-    Files.writeString(tmp, lines.mkString("", "\r\n", "\r\n"))
-    Files.move(tmp, Paths.get(out),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    AtomicFile.write(Paths.get(out), lines.mkString("", "\r\n", "\r\n"))
     Files.writeString(meta, s"""{"fingerprint":"$fp","tag":"${job.tag}"}""")
     out
   }

@@ -3,7 +3,11 @@ package graft.engine
 import graft.geom.Zone
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
@@ -19,7 +23,21 @@ object ZoneStore {
 
   /** Attribute field names (parquet footer scan, no Spark session) —
     * used by config validation (agg_field presence). */
-  def fields(path: String): Seq[String] = {
+  def fields(path: String): Seq[String] =
+    footer(path).getSchema.getFields.asScala.map(_.getName).toSeq
+
+  /** The Spark schema of the layer, read from its footer the way a
+    * schema-inferring read derives it (the Spark-written row schema
+    * when present) — but on the driver, without a Spark job. */
+  private def sparkSchema(path: String): StructType = {
+    val m = footer(path)
+    Option(m.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get)
+        .convert(m.getSchema))
+  }
+
+  private def footer(path: String): FileMetaData = {
     // Spark writes parquet "files" as directories of part files —
     // read the footer of the first part in that case
     val p = java.nio.file.Paths.get(path)
@@ -37,10 +55,7 @@ object ZoneStore {
     val in = HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file), new Configuration())
     val reader = ParquetFileReader.open(in)
-    try {
-      reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName).toSeq
-    } finally reader.close()
+    try reader.getFooter.getFileMetaData finally reader.close()
   }
 
   def write(spark: SparkSession, zones: Seq[Zone], groupField: String,
@@ -76,7 +91,7 @@ object ZoneStore {
   /** Load zones with `groupField` as the grouping value. */
   def load(spark: SparkSession, path: String,
       groupField: String): Seq[Zone] = {
-    spark.read.parquet(path)
+    spark.read.schema(sparkSchema(path)).parquet(path)
       .select("fid", groupField, "geom_wkb")
       .collect()
       .map { r =>

@@ -95,19 +95,16 @@ object Dedup {
     // producer pass plus a 2-element array per row. Same rows — the
     // swap is column renaming, null ids included — so distinct() and
     // everything downstream are unchanged.
-    val adj0 = edges.select(explode(array(
+    val adj0 = graft.engine.Caches.persist(edges.select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .persist()
+      .distinct())
     // a failing edge-producer job must not strand the partly-pinned
-    // adj0 blocks (registration only happens after a successful count)
+    // adj0 blocks until the next drain
     val edgeCount =
       try adj0.count()
       catch { case e: Throwable => adj0.unpersist(false); throw e }
-    graft.engine.Caches.register(spark,
-      () => { adj0.unpersist(false); () })
     val adj = reroot(adj0)
 
     // by NAME, not ordinal — a nodes frame where "id" is not the
@@ -185,9 +182,6 @@ object Dedup {
       labels = reroot(next0)
       converged = changed == 0
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"CC round $iter changed=$changed " +
-          s"t=${System.nanoTime() / 1000000}")
     }
     } catch {
       case e: Throwable =>

@@ -99,198 +99,125 @@ object ImageOps {
     * band matches exactly — by pigeonhole every pair within
     * Hamming ≤ bands−1 is guaranteed caught, and candidates shuffle
     * on the band key, never the all-pairs space. Exact `bit_count`
-    * filter afterwards. */
+    * filter afterwards.
+    *
+    * Blank/solid-color frames — the dominant duplicate class in web
+    * image corpora — give m tiles ONE dhash value: the band join runs
+    * over DISTINCT values (the [[BandedIndex]] value-level collapse;
+    * Hamming distance depends only on the values) and member pairs
+    * re-expand afterwards; the expansion is output-sized, which is
+    * inherent to the all-pairs API. An optional per-bucket frequency
+    * cap (`maxBandFreq`, over distinct VALUES) guards the residual
+    * adversarial case; dropping a bucket is reported loudly because
+    * it is a recall decision. */
   def dhashNearDupPairs(df: DataFrame, idCol: String, dhCol: String,
       bands: Int, bitsPerBand: Int, maxHamming: Int,
       maxBandFreq: Int = Int.MaxValue): DataFrame = {
     requirePigeonhole(bands, bitsPerBand, maxHamming)
-    val bandKeysArr = dhashBandKeys(bands, bitsPerBand)
-    // HOT-BUCKET GUARD: blank/solid-color frames — the dominant
-    // duplicate class in web image corpora — give m tiles ONE dhash
-    // value and would meet as m² candidate rows inside each band
-    // bucket. Collapse to DISTINCT hash values first (Hamming distance
-    // depends only on the values), band-join the values, and re-expand
-    // member pairs afterwards; the expansion is output-sized, which is
-    // inherent to the all-pairs API. An optional per-bucket frequency
-    // cap (`maxBandFreq`, over distinct VALUES) guards the residual
-    // adversarial case; dropping a bucket is reported loudly because
-    // it is a recall decision.
     val members = df.select(col(idCol).as("id"), col(dhCol).as("dh"))
-    val vals = members.select(col("dh")).distinct()
-    val banded0 = vals.select(col("dh"), explode(bandKeysArr).as("key"))
-    val banded = Lsh.capBandBuckets(banded0, "key", maxBandFreq, "dhash")
-    val a = banded.select(col("key"), col("dh").as("dh_a"))
-    val b = banded.select(col("key"), col("dh").as("dh_b"))
-    // near-dup pairs among distinct VALUES (deduped across bands)
-    val valPairs = a.join(b, Seq("key"))
-      .where(col("dh_a") < col("dh_b"))
-      .select("dh_a", "dh_b").distinct()
-      .withColumn("hamming",
-        bit_count(col("dh_a").bitwiseXOR(col("dh_b"))).cast("int"))
-      .where(col("hamming") <= maxHamming)
-    // cross-value expansion (each member pair appears exactly once:
-    // value pairs are distinct and the groups are disjoint, so no
-    // output-level distinct is needed)
-    val cross = valPairs
-      .join(members.select(col("dh").as("dh_a"), col("id").as("ma")),
-        Seq("dh_a"))
-      .join(members.select(col("dh").as("dh_b"), col("id").as("mb")),
-        Seq("dh_b"))
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col("hamming"))
-    // intra-value pairs: identical hashes, Hamming exactly 0
-    val intra = members.select(col("dh"), col("id").as("id_a"))
-      .join(members.select(col("dh"), col("id").as("id_b")), Seq("dh"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0).cast("int").as("hamming"))
-    intra.unionByName(cross)
+    // candidate pairs among distinct VALUES (deduped across bands)
+    val valPairs = Lsh.bandPairs(Lsh.capBandBuckets(
+      valueBandsOf(members.select("dh").distinct(), bands, bitsPerBand),
+      "key", maxBandFreq, "dhash"), "key", "dh")
+    hammingMemberPairs(valPairs, members, lit(true), maxHamming)
   }
 
+  /** (dh, key) band rows of distinct hash values. */
+  private def valueBandsOf(vals: DataFrame, bands: Int,
+      bitsPerBand: Int): DataFrame =
+    vals.select(col("dh"), explode(dhashBandKeys(bands, bitsPerBand))
+      .as("key"))
+
+  /** Member pairs of candidate value pairs within `maxHamming`, verified
+    * from the candidate rows' own hash values; identical hashes score
+    * Hamming 0. */
+  private def hammingMemberPairs(valPairs: DataFrame, members: DataFrame,
+      isNew: Column, maxHamming: Int): DataFrame =
+    BandedIndex.memberPairs(valPairs
+      .withColumn("hamming",
+        bit_count(col("rep_a").bitwiseXOR(col("rep_b"))).cast("int"))
+      .where(col("hamming") <= maxHamming),
+      members, isNew, "dh", "hamming", lit(0))
+
   /** Persistable dHash index of a deduped image corpus — the
-    * incremental state for the IMAGE modality: id→value members plus
-    * the band keys of each DISTINCT hash value (the value-level
-    * collapse is the index's shape, so a corpus of 10⁶ blank frames
-    * indexes as ONE banded value). Save `valueBands` bucketed by
-    * `key` and `members` by `dh` for shuffle-free per-batch joins. */
+    * incremental state for the IMAGE modality: a [[BandedIndex]]
+    * grouped on the hash value, so id→value members plus the band keys
+    * of each DISTINCT value (a corpus of 10⁶ blank frames indexes as
+    * ONE banded value). Save `valueBands` bucketed by `key` and
+    * `members` by `dh` for shuffle-free per-batch joins. */
   final case class DhashIndex(members: DataFrame, valueBands: DataFrame,
-    bands: Int, bitsPerBand: Int) {
-    /** Persist as the incremental-dedup state (the
-      * [[graft.operators.TextOps.MinhashIndex.save]] convention):
-      * members + banded distinct values as parquet plus a params
-      * sidecar — banding parameters travel WITH the index so a later
-      * batch cannot band under a different split and silently lose
-      * all recall. */
-    def save(dir: String): Unit = {
-      members.write.mode("overwrite").parquet(s"$dir/members")
-      valueBands.write.mode("overwrite").parquet(s"$dir/valueBands")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "params.json"),
-        s"""{"bands":$bands,"bitsPerBand":$bitsPerBand}""")
-    }
+    bands: Int, bitsPerBand: Int) extends IndexStore.Persisted {
+    /** Persist with the banding parameters ([[IndexStore]]). */
+    def save(dir: String): Unit = IndexStore.save(dir,
+      Seq("members" -> members, "valueBands" -> valueBands),
+      Seq("bands" -> bands, "bitsPerBand" -> bitsPerBand))
   }
 
   def loadDhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DhashIndex =
-    DhashIndex(spark.read.parquet(s"$dir/members"),
-      spark.read.parquet(s"$dir/valueBands"),
-      IndexParams.intOf(dir, "bands"),
-      IndexParams.intOf(dir, "bitsPerBand"))
+      dir: String): DhashIndex = {
+    val s = IndexStore.load(spark, dir, Seq("members", "valueBands"))
+    DhashIndex(s.frames("members"), s.frames("valueBands"),
+      s.int("bands"), s.int("bitsPerBand"))
+  }
 
   def dhashIndex(df: DataFrame, idCol: String, dhCol: String,
       bands: Int, bitsPerBand: Int): DhashIndex = {
     val members = df.select(col(idCol).as("id"), col(dhCol).as("dh"))
     DhashIndex(members,
-      members.select("dh").distinct()
-        .select(col("dh"),
-          explode(dhashBandKeys(bands, bitsPerBand)).as("key")),
+      valueBandsOf(members.select("dh").distinct(), bands, bitsPerBand),
       bands, bitsPerBand)
   }
 
-  /** Fold a new batch into the index: members union; only values the
-    * corpus has NEVER seen are banded (value-level state — re-banding
-    * a known value would duplicate its (dh, key) rows). O(batch). */
+  /** Band rows of the batch (id, dh) values the corpus has never
+    * seen: the batch resolved against the index's values
+    * ([[BandedIndex.resolve]]; valueBands holds one row per (value,
+    * band), so band 0 is one row per corpus value). A value is its own
+    * representative, so resolving changes no member's group: the batch
+    * members themselves are the resolved members. */
+  private def freshBands(index: DhashIndex, batch: DataFrame): DataFrame =
+    valueBandsOf(BandedIndex.resolve(batch,
+        index.valueBands.where(col("key.band") === 0), "dh", "dh")
+      .where(!col("joined_corpus")).select("dh").distinct(), index.bands,
+      index.bitsPerBand)
+
+  /** Fold a new batch into the index ([[BandedIndex]] append): members
+    * union; only values the corpus has NEVER seen are banded
+    * (re-banding a known value would duplicate its (dh, key) rows).
+    * O(batch). */
   def dhashIndexAppend(index: DhashIndex, newDf: DataFrame,
       idCol: String, dhCol: String): DhashIndex = {
-    val newMembers = newDf.select(col(idCol).as("id"),
-      col(dhCol).as("dh"))
-    val corpusVals = index.valueBands
-      .where(col("key.band") === 0).select("dh")
-    val freshBands = newMembers.select("dh").distinct()
-      .join(corpusVals, Seq("dh"), "left_anti")
-      .select(col("dh"),
-        explode(dhashBandKeys(index.bands, index.bitsPerBand))
-          .as("key"))
-    DhashIndex(index.members.unionByName(newMembers),
-      index.valueBands.unionByName(freshBands),
-      index.bands, index.bitsPerBand)
+    val batch = newDf.select(col(idCol).as("id"), col(dhCol).as("dh"))
+    index.copy(members = index.members.unionByName(batch),
+      valueBands = index.valueBands.unionByName(freshBands(index, batch)))
   }
 
-  /** The index after REMOVING images (takedowns): members drop by
-    * anti-join; a hash VALUE leaves the band index only when its last
-    * member went (the value-level state mirrors the value-level
-    * collapse). Only values the takedown touched are checked —
-    * O(affected), not O(corpus). Equals [[dhashIndex]] over the
-    * reduced corpus (IndexRemoveSpec). Unknown ids are no-ops. */
+  /** The index after REMOVING images (takedowns, [[BandedIndex.remove]]):
+    * a hash value leaves the band index only when its last member
+    * went. Equals [[dhashIndex]] over the reduced corpus. */
   def dhashIndexRemove(index: DhashIndex, removeIds: DataFrame,
       idCol: String): DhashIndex = {
-    val ids = removeIds.select(col(idCol).as("id")).distinct()
-    val members2 = index.members.join(broadcast(ids), Seq("id"),
-      "left_anti")
-    val touchedVals = index.members.join(broadcast(ids), Seq("id"))
-      .select("dh").distinct()
-    // touched values with NO surviving member are dead
-    val deadVals = broadcast(touchedVals)
-      .join(members2, Seq("dh"), "left_anti")
-    DhashIndex(members2,
-      index.valueBands.join(broadcast(deadVals), Seq("dh"), "left_anti"),
-      index.bands, index.bitsPerBand)
+    val (members, rekey) = BandedIndex.remove(index.members, removeIds,
+      idCol, "dh", None)
+    index.copy(members = members, valueBands = rekey(index.valueBands, "dh"))
   }
 
   /** Incremental perceptual dedup: all pairs within Hamming <=
     * maxHamming involving a batch image, given the corpus
     * [[DhashIndex]] — value-identical to [[dhashNearDupPairs]] over
     * corpus ∪ batch filtered to batch-touching pairs (oracle-pinned
-    * by q_image_incr). Only the batch's hash VALUES band: genuinely
-    * new values join the saved index; values the batch GAINED members
-    * in (a new copy of a known image must inherit that value's
-    * Hamming neighborhood — the dominant ingest case) re-enter the
-    * band join from the index side. Member expansion keeps only
-    * batch-touching pairs, so corpus-internal pairs never re-emit. */
+    * by q_image_incr; [[BandedIndex]] incremental candidates and member
+    * expansion). Only the batch's hash VALUES band. */
   def dhashNearDupIncremental(index: DhashIndex, newDf: DataFrame,
       idCol: String, dhCol: String, maxHamming: Int,
       maxBandFreq: Int = Int.MaxValue): DataFrame = {
-    val bands = index.bands
-    val bitsPerBand = index.bitsPerBand
-    requirePigeonhole(bands, bitsPerBand, maxHamming)
-    val newMembers = newDf.select(col(idCol).as("id"),
-      col(dhCol).as("dh"))
-    // the index's distinct values, shuffle-free: valueBands holds one
-    // row per (value, band), so band 0 is exactly one row per value
-    val corpusVals = index.valueBands
-      .where(col("key.band") === 0).select("dh")
-    val batchVals = newMembers.select("dh").distinct()
-    val freshVals = batchVals.join(corpusVals, Seq("dh"), "left_anti")
-    val freshBands = freshVals.select(col("dh"),
-      explode(dhashBandKeys(bands, bitsPerBand)).as("key"))
-    // the frequency cap must see the value universe (index + fresh)
-    // so a bucket is kept or dropped consistently for both join sides
-    val kept = Lsh.capBandBuckets(
-      index.valueBands.unionByName(freshBands), "key", maxBandFreq,
-      "dhash-incr")
-    // the left side is every batch value: fresh ones (now in `kept`
-    // via freshBands) plus gained ones (already banded in the index)
-    val valPairs = kept.join(batchVals, Seq("dh"))
-      .select(col("key"), col("dh").as("dh_l"))
-      .join(kept.select(col("key"), col("dh").as("dh_r")), Seq("key"))
-      .where(col("dh_l") =!= col("dh_r"))
-      .select(least(col("dh_l"), col("dh_r")).as("dh_a"),
-        greatest(col("dh_l"), col("dh_r")).as("dh_b"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("dh_a").bitwiseXOR(col("dh_b"))).cast("int"))
-      .where(col("hamming") <= maxHamming)
-    val allMembers = index.members.withColumn("is_new", lit(false))
-      .unionByName(newMembers.withColumn("is_new", lit(true)))
-    val cross = valPairs
-      .join(allMembers.select(col("dh").as("dh_a"), col("id").as("ma"),
-        col("is_new").as("na")), Seq("dh_a"))
-      .join(allMembers.select(col("dh").as("dh_b"), col("id").as("mb"),
-        col("is_new").as("nb")), Seq("dh_b"))
-      .where(col("na") || col("nb"))
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col("hamming"))
-    // intra-value: the batch side drives (never members ⋈ members);
-    // distinct folds the two orientations of batch-batch pairs
-    val intra = newMembers.select(col("dh"), col("id").as("id_n"))
-      .join(allMembers.select(col("dh"), col("id").as("id_m")),
-        Seq("dh"))
-      .where(col("id_n") =!= col("id_m"))
-      .select(least(col("id_n"), col("id_m")).as("id_a"),
-        greatest(col("id_n"), col("id_m")).as("id_b"),
-        lit(0).cast("int").as("hamming"))
-      .distinct()
-    intra.unionByName(cross)
+    requirePigeonhole(index.bands, index.bitsPerBand, maxHamming)
+    val batch = newDf.select(col(idCol).as("id"), col(dhCol).as("dh"))
+    val universe = BandedIndex.bandUniverse(index.valueBands,
+      freshBands(index, batch), "key", maxBandFreq, "dhash-incr")
+    hammingMemberPairs(
+      BandedIndex.candidates(universe, batch, "dh", "dh", "key"),
+      BandedIndex.withBatch(index.members, batch), col("is_new"),
+      maxHamming)
   }
 
   /** Per-tile decode + stats over a tile table (the library surface

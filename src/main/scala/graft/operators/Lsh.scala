@@ -63,6 +63,15 @@ object Lsh {
       2 * spark.sparkContext.defaultParallelism), cols: _*)
   }
 
+  /** Distinct (`a` < `b`) pairs of `member` values that share a
+    * `key` row of `banded` — the plain band self-join. */
+  def bandPairs(banded: DataFrame, key: String, member: String,
+      a: String = "rep_a", b: String = "rep_b"): DataFrame =
+    banded.select(col(key), col(member).as(a))
+      .join(banded.select(col(key), col(member).as(b)), Seq(key))
+      .where(col(a) < col(b))
+      .select(a, b).distinct()
+
   /** Per-bucket frequency cap for a banded (key, member) frame — the
     * winnowing `maxDocFreq` guard generalized: adversarial inputs can
     * pile distinct contents into one band bucket even after
@@ -77,10 +86,8 @@ object Lsh {
       maxBandFreq: Int, tag: String): DataFrame = {
     if (maxBandFreq == Int.MaxValue) banded
     else {
-      val freq = banded.groupBy(keyCol).agg(count(lit(1)).as("__freq"))
-        .persist()
-      graft.engine.Caches.register(banded.sparkSession,
-        () => { freq.unpersist(false); () })
+      val freq = graft.engine.Caches.persist(
+        banded.groupBy(keyCol).agg(count(lit(1)).as("__freq")))
       val nDropped = freq.where(col("__freq") > maxBandFreq).count()
       if (nDropped > 0)
         System.err.println(s"[graft] $tag LSH: dropped $nDropped " +

@@ -46,12 +46,17 @@ object Similarity {
       .where(col("query_id") =!= col("cand_id"))
       .withColumn("score", dot(col("qv"), col("cv")) /
         (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w))
+    topK(scored, k)
+  }
+
+  /** The k best `score`d candidates per query, ranked (score DESC,
+    * cand_id ASC). */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window
+        .partitionBy("query_id").orderBy(col("score").desc,
+          col("cand_id").asc)))
       .where(col("rank") <= k)
       .select("query_id", "cand_id", "rank", "score")
-  }
 
   /** Near-duplicate pairs (a<b) with cosine >= threshold, brute
     * force over a broadcastable side. */
@@ -97,26 +102,17 @@ object Similarity {
     * bucketed by `bucket` so per-batch joins in
     * [[srpNearDupIncremental]] are shuffle-free on the corpus side. */
   final case class SrpIndex(vectors: DataFrame, dim: Int,
-    numPlanes: Int) {
-    /** Persist as the incremental-dedup state (the
-      * [[graft.operators.TextOps.MinhashIndex.save]] convention):
-      * the banded vectors as parquet plus a params sidecar — the
-      * projection parameters MUST travel with the data (a batch
-      * bucketed under different hyperplanes shares no keys and
-      * silently loses every pair). */
-    def save(dir: String): Unit = {
-      vectors.write.mode("overwrite").parquet(s"$dir/vectors")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "params.json"),
-        s"""{"dim":$dim,"numPlanes":$numPlanes}""")
-    }
+    numPlanes: Int) extends IndexStore.Persisted {
+    /** Persist with the projection parameters ([[IndexStore]]). */
+    def save(dir: String): Unit = IndexStore.save(dir,
+      Seq("vectors" -> vectors), Seq("dim" -> dim, "numPlanes" -> numPlanes))
   }
 
   def loadSrpIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): SrpIndex =
-    SrpIndex(spark.read.parquet(s"$dir/vectors"),
-      IndexParams.intOf(dir, "dim"), IndexParams.intOf(dir, "numPlanes"))
+      dir: String): SrpIndex = {
+    val s = IndexStore.load(spark, dir, Seq("vectors"))
+    SrpIndex(s.frames("vectors"), s.int("dim"), s.int("numPlanes"))
+  }
 
   def srpIndex(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, numPlanes: Int): SrpIndex =
@@ -134,14 +130,13 @@ object Similarity {
         .vectors))
 
   /** The index after REMOVING vectors (takedowns): one broadcast
-    * anti-join — vectors are indexed per-id with no shared state, so
-    * removal is exact and equals [[srpIndex]] over the reduced
-    * corpus. Unknown ids are no-ops. */
+    * anti-join ([[BandedIndex.dropIds]]) — vectors are indexed per-id
+    * with no shared state, so removal is exact and equals [[srpIndex]]
+    * over the reduced corpus. Unknown ids are no-ops. */
   def srpIndexRemove(index: SrpIndex, removeIds: DataFrame,
       idCol: String): SrpIndex =
-    index.copy(vectors = index.vectors.join(
-      broadcast(removeIds.select(col(idCol).as("id")).distinct()),
-      Seq("id"), "left_anti"))
+    index.copy(vectors = BandedIndex.dropIds(index.vectors, removeIds,
+      idCol))
 
   /** Incremental SRP near-dedup: all cosine >= threshold pairs
     * sharing an SRP bucket that INVOLVE a batch vector, given the
@@ -176,19 +171,12 @@ object Similarity {
     * [[cosineNearDupPairs]] but with bucket-join complexity. */
   def srpNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, numPlanes: Int, threshold: Double): DataFrame = {
-    val withB = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", srpBucket(col("v"), dim, numPlanes))
-      .withColumn("nrm", sqrt(norm2(col("v"))))
+    val withB = srpRows(df, idCol, vecCol, dim, numPlanes)
     val a = Lsh.spreadBy(withB, col("id")).select(col("bucket"),
       col("id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = withB.select(col("bucket"), col("id").as("id_b"),
       col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("score", dot(col("va"), col("vb")) /
-        (col("na") * col("nb")))
-      .where(col("score") >= threshold)
-      .select("id_a", "id_b", "score").distinct()
+    scoredPairs(a, b, "bucket", threshold)
   }
 
   /** Multi-probe SRP near-dup: each vector probes its exact bucket
@@ -203,9 +191,7 @@ object Similarity {
   def srpNearDupPairsMultiProbe(df: DataFrame, idCol: String,
       vecCol: String, dim: Int, numPlanes: Int,
       threshold: Double): DataFrame = {
-    val withB = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", srpBucket(col("v"), dim, numPlanes))
-      .withColumn("nrm", sqrt(norm2(col("v"))))
+    val withB = srpRows(df, idCol, vecCol, dim, numPlanes)
     val probeKeys = array(
       (col("bucket") +:
         (0 until numPlanes).map(p =>
@@ -215,31 +201,44 @@ object Similarity {
         col("nrm").as("na"), explode(probeKeys).as("bucket"))
     val b = withB.select(col("bucket"), col("id").as("id_b"),
       col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, Seq("bucket"))
+    scoredPairs(a, b, "bucket", threshold)
+  }
+
+  /** (id, v, bucket, nrm): `df`'s vectors with their SRP bucket and
+    * norm. */
+  private def srpRows(df: DataFrame, idCol: String, vecCol: String,
+      dim: Int, numPlanes: Int): DataFrame =
+    srpIndex(df, idCol, vecCol, dim, numPlanes).vectors
+      .withColumn("nrm", sqrt(norm2(col("v"))))
+
+  /** Distinct (id_a < id_b, score) pairs of the `key` equi-join of
+    * probe rows (id_a, va, na) and build rows (id_b, vb, nb) whose
+    * cosine reaches `threshold`. */
+  private def scoredPairs(a: DataFrame, b: DataFrame, key: String,
+      threshold: Double): DataFrame =
+    a.join(b, Seq(key))
       .where(col("id_a") < col("id_b"))
       .withColumn("score", dot(col("va"), col("vb")) /
         (col("na") * col("nb")))
       .where(col("score") >= threshold)
       .select("id_a", "id_b", "score").distinct()
-  }
 
   /** Persistable IVF index: FROZEN centroids (the trained coarse
     * quantizer travels with the index — assignment under different
     * centroids shares no lists) + per-vector list assignment.
-    * [[IvfIndex.save]] writes plain parquet (the MinhashIndex.save
-    * convention); at catalog-deployment scale, bucket `assigned` by
-    * `list_id` so probes equi-join the stored layout shuffle-free.
+    * [[IvfIndex.save]] writes it through [[IndexStore]]; at
+    * catalog-deployment scale, bucket `assigned` by `list_id` so
+    * probes equi-join the stored layout shuffle-free.
     * The serving-time shape of IVF at corpus scale: train once
     * (KMeans), assign incrementally forever. */
   final case class IvfIndex(assigned: DataFrame, centIds: Array[Long],
-      centVecs: Array[Array[Float]]) {
+      centVecs: Array[Array[Float]]) extends IndexStore.Persisted {
     private[operators] def refIndex = new graft.functions.IvfCentroids(
       centIds, centVecs)
     /** Centroid floats persist as raw IEEE-754 bits — the quantizer
       * must round-trip EXACTLY or every future assignment is against
       * a perturbed codebook. */
     def save(dir: String): Unit = {
-      assigned.write.mode("overwrite").parquet(s"$dir/assigned")
       val sb = new StringBuilder("{\"centroids\":[")
       centIds.indices.foreach { i =>
         if (i > 0) sb.append(',')
@@ -248,14 +247,14 @@ object Similarity {
           .mkString(",")).append("]}")
       }
       sb.append("]}")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "centroids.json"), sb.toString)
+      IndexStore.save(dir, Seq("assigned" -> assigned), Nil,
+        Seq("centroids.json" -> sb.toString))
     }
   }
 
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfIndex = {
+    val s = IndexStore.load(spark, dir, Seq("assigned"))
     val txt = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "centroids.json"))
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -269,8 +268,7 @@ object Similarity {
         b += java.lang.Float.intBitsToFloat(x.asInt()))
       vecs += b.result()
     }
-    IvfIndex(spark.read.parquet(s"$dir/assigned"), ids.result(),
-      vecs.result())
+    IvfIndex(s.frames("assigned"), ids.result(), vecs.result())
   }
 
   /** Build the index: assign every vector to its nearest centroid's
@@ -308,14 +306,13 @@ object Similarity {
   /** Takedown: per-id rows drop; lists keep their other members. */
   def ivfIndexRemove(index: IvfIndex, removeIds: DataFrame,
       idCol: String): IvfIndex =
-    index.copy(assigned = index.assigned.join(
-      broadcast(removeIds.select(col(idCol).as("id")).distinct()),
-      Seq("id"), "left_anti"))
+    index.copy(assigned = BandedIndex.dropIds(index.assigned, removeIds,
+      idCol))
 
   /** Top-k against the STORED assignment: queries probe their nProbe
-    * nearest lists and equi-join the index — identical semantics to
-    * [[ivfTopK]] over the same corpus and centroids (spec-pinned),
-    * without re-assigning any candidate. */
+    * nearest lists and equi-join the index, without re-assigning any
+    * candidate ([[ivfTopK]] is this probe over a freshly built
+    * index). */
   def ivfIndexTopK(index: IvfIndex, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int): DataFrame = {
     import graft.functions.functions.ivf_nearest
@@ -330,11 +327,7 @@ object Similarity {
       .where(col("query_id") =!= col("cand_id"))
       .withColumn("score", dot(col("queryv"), col("candv")) /
         (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "cand_id", "rank", "score")
+    topK(scored, k)
   }
 
   /** Σ (aᵢ−bᵢ)² in double, sequential fold (order-stable). */
@@ -364,33 +357,9 @@ object Similarity {
   def ivfTopK(candidates: DataFrame, queries: DataFrame,
       centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, k: Int,
-      nProbe: Int): DataFrame = {
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(centIdCol).cast("long"), col(centVecCol))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    require(cents.nonEmpty, "centroid table is empty")
-    val index = new graft.functions.IvfCentroids(
-      cents.map(_._1), cents.map(_._2))
-    import graft.functions.functions.ivf_nearest
-
-    val cand = candidates.select(col(idCol).as("cand_id"),
-      col(vecCol).as("candv"), sqrt(norm2(col(vecCol))).as("cn"),
-      element_at(ivf_nearest(col(vecCol), index, 1), 1).as("list_id"))
-    val qry = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("queryv"), sqrt(norm2(col(vecCol))).as("qn"),
-      explode(ivf_nearest(col(vecCol), index, nProbe)).as("list_id"))
-    val scored = qry.join(cand, Seq("list_id"))
-      .where(col("query_id") =!= col("cand_id"))
-      .withColumn("score", dot(col("queryv"), col("candv")) /
-        (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "cand_id", "rank", "score")
-  }
+      nProbe: Int): DataFrame =
+    ivfIndexTopK(ivfIndex(candidates, idCol, vecCol, centroids, centIdCol,
+      centVecCol), queries, idCol, vecCol, k, nProbe)
 
   /** Banded SRP (OR-amplification, the LSH band trick applied to sign
     * bits): the `numPlanes` bits split into `numBands` contiguous
@@ -404,9 +373,7 @@ object Similarity {
     require(numPlanes % numBands == 0, "numBands must divide numPlanes")
     val bandBits = numPlanes / numBands
     val mask = (1L << bandBits) - 1
-    val withB = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", srpBucket(col("v"), dim, numPlanes))
-      .withColumn("nrm", sqrt(norm2(col("v"))))
+    val withB = srpRows(df, idCol, vecCol, dim, numPlanes)
     val bandKeys = array((0 until numBands).map { b =>
       struct(lit(b).as("band"),
         shiftright(col("bucket"), b * bandBits).bitwiseAND(lit(mask))
@@ -417,11 +384,6 @@ object Similarity {
         col("nrm").as("na"), explode(bandKeys).as("key"))
     val b = withB.select(col("id").as("id_b"), col("v").as("vb"),
       col("nrm").as("nb"), explode(bandKeys).as("key"))
-    a.join(b, Seq("key"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("score", dot(col("va"), col("vb")) /
-        (col("na") * col("nb")))
-      .where(col("score") >= threshold)
-      .select("id_a", "id_b", "score").distinct()
+    scoredPairs(a, b, "key", threshold)
   }
 }

@@ -107,11 +107,7 @@ object TextOps {
     // times downstream, so CollapseProject keeps the projection
     // boundary and the HOF lambdas stay linear (staged-projection
     // rule — see the winnowing scaladoc).
-    if (ns.size > 1) {
-      base.persist()
-      graft.engine.Caches.register(df.sparkSession,
-        () => { base.unpersist(false); () })
-    }
+    if (ns.size > 1) graft.engine.Caches.persist(base)
     // wc > 0 guards the fraction: a whitespace-only doc can tokenize
     // to empty-string tokens (size >= n) with ZERO word chars — its
     // gram would score 0/0 = NaN here and engine-dependently in SQL
@@ -385,14 +381,9 @@ object TextOps {
     * [[contentGroups]]) — banding a corpus with exact-duplicate
     * clusters makes m² candidates inside one bucket. */
   def lshCandidatePairs(sig: DataFrame, numBands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val bands = bandKeys(sig, numBands, rowsPerBand)
-    val l = bands.select(col("band_key"), col("id").as("id_a"))
-    val r = bands.select(col("band_key"), col("id").as("id_b"))
-    l.join(r, Seq("band_key"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+      rowsPerBand: Int): DataFrame =
+    Lsh.bandPairs(bandKeys(sig, numBands, rowsPerBand), "band_key", "id",
+      "id_a", "id_b")
 
   /** Canonical content key of a document's TOKEN SET: md5 of the
     * sorted distinct tokens. Two documents with equal token sets have
@@ -402,17 +393,11 @@ object TextOps {
   def tokenSetKey(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
 
-  /** (id, ckey, rid) per document: content key + the min-id
-    * REPRESENTATIVE of each exact-content group. The hot-bucket guard
-    * every LSH band join needs: a cluster of m exact duplicates shares
-    * every band bucket, so banding the raw corpus makes m² candidate
-    * rows inside one band key (boilerplate pages are the dominant
-    * duplicate class at corpus scale — this is the classic 100 TB
-    * dedup scale-killer). Band-joining the representatives makes
-    * candidates scale with DISTINCT contents instead. */
+  /** (id, ckey, rid) per document: the token-set group key and the
+    * group's min-id representative — the MinHash collapse of
+    * [[BandedIndex]]. */
   private def contentGroups(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("ckey")
     // null-text docs have no token set: tokenSetKey's concat_ws over
     // the null array would yield md5("") and group them with
     // whitespace-only docs — but the batch tokenHashes path (and the
@@ -423,8 +408,8 @@ object TextOps {
     val ckey = when(col(textCol).isNull,
       concat(lit("\u0000id:"), col(idCol).cast("string")))
       .otherwise(tokenSetKey(col(textCol)))
-    df.select(col(idCol).as("id"), ckey.as("ckey"))
-      .withColumn("rid", min("id").over(w))
+    BandedIndex.collapse(df.select(col(idCol).as("id"), ckey.as("ckey")),
+      "ckey")
   }
 
   /** Verified near-dup pairs among `repDocs` (one doc per distinct
@@ -447,7 +432,6 @@ object TextOps {
   private def repNearDupPairs(repDocs: DataFrame, numHashes: Int,
       numBands: Int, minJaccard: Double,
       maxBandFreq: Int = Int.MaxValue): DataFrame = {
-    val spark = repDocs.sparkSession
     // persisted for three reasons: the signatures are derived from it
     // (each token is md5-hashed ONCE per rep, for both uses), it feeds
     // BOTH verify join sides, and the materialized size stat lets
@@ -455,16 +439,12 @@ object TextOps {
     // the estimate inflates through the upstream join and both verify
     // joins fall back to sorting + shuffling the full candidate set —
     // measured 10× slower)
-    val tokSets = repDocs.select(col("id"),
-      TextOps.tokenHashSet(col("text")).as("toks")).persist()
-    graft.engine.Caches.register(spark,
-      () => { tokSets.unpersist(false); () })
+    val tokSets = graft.engine.Caches.persist(repDocs.select(col("id"),
+      TextOps.tokenHashSet(col("text")).as("toks")))
     // rep-dimension-sized (one row per distinct content) and consumed
     // 2·numBands times by the banded self-join: cached so the
     // per-row signatures run once, not once per band PER JOIN SIDE
-    val sig = signatures(tokSets, numHashes).persist()
-    graft.engine.Caches.register(spark,
-      () => { sig.unpersist(false); () })
+    val sig = graft.engine.Caches.persist(signatures(tokSets, numHashes))
     val rowsPerBand = numHashes / numBands
     val cand = if (maxBandFreq == Int.MaxValue) {
       // UNCAPPED band join (r8): emit each candidate pair from its
@@ -488,8 +468,8 @@ object TextOps {
       }.reduce(_ unionByName _)
       val banded = Lsh.spreadBands(withB)
       val l = banded.select(col("band_key"), col("band_idx"),
-        col("id").as("id_a"), col("sigs").as("sa"))
-      val r = banded.select(col("band_key"), col("id").as("id_b"),
+        col("id").as("rep_a"), col("sigs").as("sa"))
+      val r = banded.select(col("band_key"), col("id").as("rep_b"),
         col("sigs").as("sb"))
       val bandEq = (0 until numBands).map { j =>
         (1 to rowsPerBand).map(t =>
@@ -501,27 +481,22 @@ object TextOps {
           when(eq, lit(j)).otherwise(rest)
         }
       l.join(r, Seq("band_key"))
-        .where(col("id_a") < col("id_b") &&
+        .where(col("rep_a") < col("rep_b") &&
           firstShared === col("band_idx"))
-        .select("id_a", "id_b")
+        .select("rep_a", "rep_b")
     } else {
       val bands = bandKeys(sig, numBands, rowsPerBand)
       // per-bucket frequency cap (the winnowing maxDocFreq guard):
       // adversarial DISTINCT contents can still pile into one bucket
-      val banded = Lsh.spreadBands(Lsh.capBandBuckets(bands, "band_key",
-        maxBandFreq, "minhash"))
-      val l = banded.select(col("band_key"), col("id").as("id_a"))
-      val r = banded.select(col("band_key"), col("id").as("id_b"))
-      l.join(r, Seq("band_key"))
-        .where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
+      Lsh.bandPairs(Lsh.spreadBands(Lsh.capBandBuckets(bands, "band_key",
+        maxBandFreq, "minhash")), "band_key", "id")
     }
     verifyJaccard(cand, tokSets, minJaccard)
   }
 
-  /** Exact token-set Jaccard verification of candidate pairs: two
-    * equi-joins on id against the per-doc distinct-token hash sets
-    * ([[tokenHashSet]]) and one intersection count per pair (the
+  /** Exact token-set Jaccard verification of candidate (rep_a, rep_b)
+    * pairs: two equi-joins on id against the per-doc distinct-token
+    * hash sets ([[tokenHashSet]]) and one intersection count per pair (the
     * single source of the jaccard formula — shared by the batch and
     * incremental dedup paths). The count is a zero-allocation sorted
     * merge ([[graft.functions.SortedIntersectCount]] — tokenHashSet
@@ -534,17 +509,24 @@ object TextOps {
   private def verifyJaccard(cand: DataFrame, tokSets: DataFrame,
       minJaccard: Double): DataFrame =
     cand
-      .join(tokSets.select(col("id").as("id_a"), col("toks").as("ta")),
-        Seq("id_a"))
-      .join(tokSets.select(col("id").as("id_b"), col("toks").as("tb")),
-        Seq("id_b"))
+      .join(tokSets.select(col("id").as("rep_a"), col("toks").as("ta")),
+        Seq("rep_a"))
+      .join(tokSets.select(col("id").as("rep_b"), col("toks").as("tb")),
+        Seq("rep_b"))
       .withColumn("inter",
         graft.functions.functions.sorted_intersect_count(
           col("ta"), col("tb")))
       .withColumn("jaccard", col("inter").cast("double") /
         (size(col("ta")) + size(col("tb")) - col("inter")).cast("double"))
       .where(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")
+      .select("rep_a", "rep_b", "jaccard")
+
+  /** Member pairs of verified rep pairs: exact duplicates score 1.0,
+    * kept while 1.0 clears `minJaccard`. */
+  private def jaccardMemberPairs(repPairs: DataFrame, members: DataFrame,
+      isNew: Column, minJaccard: Double): DataFrame =
+    BandedIndex.memberPairs(repPairs, members, isNew, "rid", "jaccard",
+      lit(1.0)).where(col("jaccard") >= minJaccard)
 
   /** Representative documents (one per distinct content, id = group
     * min id) of `df` given its content groups. */
@@ -563,30 +545,11 @@ object TextOps {
     * [[minhashDedupClusters]], whose output is one row per document. */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, numBands: Int, minJaccard: Double): DataFrame = {
-    val members = contentGroups(df, idCol, textCol).persist()
-    graft.engine.Caches.register(df.sparkSession,
-      () => { members.unpersist(false); () })
-    val repPairs = repNearDupPairs(
+    val members = graft.engine.Caches.persist(
+      contentGroups(df, idCol, textCol))
+    jaccardMemberPairs(repNearDupPairs(
       repDocsOf(df, idCol, textCol, members),
-      numHashes, numBands, minJaccard)
-      .select(col("id_a").as("rid_a"), col("id_b").as("rid_b"),
-        col("jaccard"))
-    // cross-group expansion: every member pair inherits its rep
-    // pair's (identical) jaccard; least/greatest restores the id_a <
-    // id_b output order since member ids interleave across groups
-    val cross = repPairs
-      .join(members.select(col("rid").as("rid_a"), col("id").as("ma")),
-        Seq("rid_a"))
-      .join(members.select(col("rid").as("rid_b"), col("id").as("mb")),
-        Seq("rid_b"))
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-    // intra-group pairs are exact duplicates: jaccard exactly 1.0
-    val intra = members.select(col("ckey"), col("id").as("id_a"))
-      .join(members.select(col("ckey"), col("id").as("id_b")), Seq("ckey"))
-      .where(col("id_a") < col("id_b") && lit(1.0) >= minJaccard)
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    intra.unionByName(cross)
+      numHashes, numBands, minJaccard), members, lit(true), minJaccard)
   }
 
   /** The corpus-scale dedup deliverable: one row per document with its
@@ -605,18 +568,17 @@ object TextOps {
       maxBandFreq: Int,
       smallGraphThreshold: Long =
         graft.operators.Dedup.SmallGraphThreshold): DataFrame = {
-    val spark = df.sparkSession
-    val members = contentGroups(df, idCol, textCol).persist()
-    graft.engine.Caches.register(spark,
-      () => { members.unpersist(false); () })
+    val members = graft.engine.Caches.persist(
+      contentGroups(df, idCol, textCol))
     val repEdges = repNearDupPairs(
       repDocsOf(df, idCol, textCol, members),
       numHashes, numBands, minJaccard, maxBandFreq)
     // rep-row filter ≡ distinct rid set (the rep is always a member —
-    // see resolveBatch's corpusGroups note); map-only, no shuffle
+    // see BandedIndex); map-only, no shuffle
     val repNodes = members.where(col("id") === col("rid")).select("id")
     val comps = graft.operators.Dedup.connectedComponents(
-      repNodes, repEdges.select("id_a", "id_b"))
+      repNodes, repEdges.select(col("rep_a").as("id_a"),
+        col("rep_b").as("id_b")))
     members
       .join(comps.select(col("id").as("rid"), col("comp")), Seq("rid"))
       .select(col("id"), col("comp"),
@@ -624,10 +586,9 @@ object TextOps {
   }
 
   /** Persistable MinHash-LSH index of an already-deduped corpus — the
-    * state that makes near-dedup INCREMENTAL on a growing corpus.
-    * Save all three frames once (at 100 TB: parquet, `repBands`
-    * bucketed by `band_key` and `repToks`/`members` by id, so the
-    * daily delta joins shuffle-free) and feed them to
+    * state that makes near-dedup INCREMENTAL on a growing corpus: a
+    * [[BandedIndex]] grouped on the token-set key. Save it once
+    * ([[IndexStore]]) and feed it to
     * [[TextOps.minhashDedupIncremental]] per ingest batch; only the
     * batch is ever tokenized or signatured again.
     *
@@ -639,37 +600,25 @@ object TextOps {
     * @param repBands (id, band_key) — each representative's LSH band
     *   keys, the join target for new batches */
   final case class MinhashIndex(members: DataFrame, repToks: DataFrame,
-    repBands: DataFrame, numHashes: Int, numBands: Int) {
+    repBands: DataFrame, numHashes: Int, numBands: Int)
+      extends IndexStore.Persisted {
 
-    /** Persist the three frames under `dir` (members/, repToks/,
-      * repBands/) plus the banding parameters (params.json) — the
-      * index is only meaningful under the parameters it was banded
-      * with, so they travel WITH it and [[loadMinhashIndex]] restores
-      * them (a batch banded with different parameters would silently
-      * share no band keys with the index — zero recall, no error).
-      * Plain parquet here; a catalog deployment should
-      * `bucketBy(ckey|id|band_key)` via saveAsTable so the per-batch
-      * joins in [[minhashDedupIncremental]] are shuffle-free on the
-      * corpus side. */
-    def save(dir: String): Unit = {
-      members.write.mode("overwrite").parquet(s"$dir/members")
-      repToks.write.mode("overwrite").parquet(s"$dir/repToks")
-      repBands.write.mode("overwrite").parquet(s"$dir/repBands")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "params.json"),
-        s"""{"numHashes":$numHashes,"numBands":$numBands}""")
-    }
+    /** Persist under `dir` with the banding parameters
+      * ([[IndexStore]]; [[loadMinhashIndex]] restores them). */
+    def save(dir: String): Unit = IndexStore.save(dir,
+      Seq("members" -> members, "repToks" -> repToks,
+        "repBands" -> repBands),
+      Seq("numHashes" -> numHashes, "numBands" -> numBands))
   }
 
   /** Reload a [[MinhashIndex]] persisted by [[MinhashIndex.save]]. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): MinhashIndex =
-    MinhashIndex(spark.read.parquet(s"$dir/members"),
-      spark.read.parquet(s"$dir/repToks"),
-      spark.read.parquet(s"$dir/repBands"),
-      IndexParams.intOf(dir, "numHashes"),
-      IndexParams.intOf(dir, "numBands"))
+      dir: String): MinhashIndex = {
+    val s = IndexStore.load(spark, dir, Seq("members", "repToks",
+      "repBands"))
+    MinhashIndex(s.frames("members"), s.frames("repToks"),
+      s.frames("repBands"), s.int("numHashes"), s.int("numBands"))
+  }
 
   /** Build the [[MinhashIndex]] of a corpus (one pass: content
     * collapse, per-representative signatures, banding). Frames are
@@ -678,116 +627,67 @@ object TextOps {
     * reload. */
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, numBands: Int): MinhashIndex = {
-    val spark = df.sparkSession
-    def reg(d: DataFrame): DataFrame = {
-      d.persist()
-      graft.engine.Caches.register(spark, () => { d.unpersist(false); () })
-      d
-    }
-    val members = reg(contentGroups(df, idCol, textCol))
-    val reps = repDocsOf(df, idCol, textCol, members)
-    val repToks = reg(reps.select(col("id"),
-      TextOps.tokenHashSet(col("text")).as("toks")))
+    val members = graft.engine.Caches.persist(
+      contentGroups(df, idCol, textCol))
+    val repToks = graft.engine.Caches.persist(
+      repDocsOf(df, idCol, textCol, members).select(col("id"),
+        TextOps.tokenHashSet(col("text")).as("toks")))
     // bands from the cached hash sets: each token is md5-hashed once
-    val repBands = reg(signatureBands(repToks, numHashes, numBands))
+    val repBands = graft.engine.Caches.persist(
+      signatureBands(repToks, numHashes, numBands))
     MinhashIndex(members, repToks, repBands, numHashes, numBands)
   }
 
-  /** Resolve an ingest batch against a corpus index: every batch doc's
-    * global content group (corpus rid where the ckey already exists),
-    * plus the genuinely-new representatives' ids and (id, toks) token
-    * hash sets — the one tokenization of the fresh reps, which their
-    * verify sets and (via [[signatureBands]]) band keys both read. */
+  /** Resolve an ingest batch against a corpus index
+    * ([[BandedIndex.resolve]]): every batch doc's global content group
+    * (id, ckey, rid, joined_corpus), plus the (id, toks) token hash
+    * sets of the genuinely-new representatives — the one tokenization
+    * of the fresh reps, which their verify sets and (via
+    * [[signatureBands]]) band keys both read. */
   private def resolveBatch(index: MinhashIndex, newDocs: DataFrame,
-      idCol: String, textCol: String):
-      (DataFrame, DataFrame, DataFrame) = {
-    // every group has exactly ONE member row with id == rid (the
-    // representative is always a member: min id at build, corpus rid
-    // on append, min-surviving on remove), so the rep-row filter IS
-    // the distinct (ckey, rid) set — map-only over the (at 100 TB:
-    // corpus-sized, id-bucketed) members frame instead of a full
-    // distinct shuffle per ingest batch (r8)
-    val corpusGroups = index.members.where(col("id") === col("rid"))
-      .select("ckey", "rid")
-    val newMembers = contentGroups(newDocs, idCol, textCol)
-      .join(corpusGroups.withColumnRenamed("rid", "crid"), Seq("ckey"),
-        "left")
-      .select(col("id"), col("ckey"),
-        coalesce(col("crid"), col("rid")).as("rid"),
-        col("crid").isNotNull.as("joined_corpus"))
-    val freshRepIds = newMembers
-      .where(!col("joined_corpus") && col("id") === col("rid"))
-      .select("id")
+      idCol: String, textCol: String): (DataFrame, DataFrame) = {
+    val newMembers = BandedIndex.resolve(
+      contentGroups(newDocs, idCol, textCol),
+      index.members.where(col("id") === col("rid")).select("ckey", "rid"),
+      "ckey", "rid")
     val freshToks = newDocs.select(col(idCol).as("id"),
-      col(textCol).as("text")).join(freshRepIds, Seq("id"))
+      col(textCol).as("text"))
+      .join(newMembers.where(!col("joined_corpus") &&
+        col("id") === col("rid")).select("id"), Seq("id"))
       .select(col("id"), TextOps.tokenHashSet(col("text")).as("toks"))
-    (newMembers, freshRepIds, freshToks)
+    (newMembers, freshToks)
   }
 
-  /** The index after ingesting a batch: batch docs join their content
-    * groups, genuinely-new contents add their representative's token
-    * set and band keys — only the BATCH is tokenized/signatured, and
-    * the result indexes corpus ∪ batch exactly as a from-scratch
-    * [[minhashIndex]] would (same groups, token sets and bands; under
-    * out-of-order ids an already-indexed group keeps its original
-    * representative, which changes no dedup semantics). Long-running
-    * ingest loops should write the updated frames back to storage per
-    * batch (re-rooting the union lineage) — the
-    * `IncrementalDedupSpec` maintenance loop models the pattern. */
+  /** The index after ingesting a batch ([[BandedIndex]] append): batch
+    * docs join their content groups, genuinely-new contents add their
+    * representative's token set and band keys — only the BATCH is
+    * tokenized/signatured. Long-running ingest loops should write the
+    * updated frames back to storage per batch (re-rooting the union
+    * lineage) — the `IncrementalDedupSpec` maintenance loop models the
+    * pattern. */
   def minhashIndexAppend(index: MinhashIndex, newDocs: DataFrame,
       idCol: String, textCol: String): MinhashIndex = {
-    val (newMembers, _, freshToks) =
+    val (newMembers, freshToks) =
       resolveBatch(index, newDocs, idCol, textCol)
     index.copy(
-      members = index.members.unionByName(
-        newMembers.select(col("id"), col("ckey"), col("rid"))),
+      members = index.members.unionByName(newMembers.drop("joined_corpus")),
       repToks = index.repToks.unionByName(freshToks),
       repBands = index.repBands.unionByName(
         signatureBands(freshToks, index.numHashes, index.numBands)))
   }
 
   /** The index after REMOVING documents (takedowns — the dedup-layer
-    * analogue of the tile table's row-level delete): surviving
-    * members of a group whose representative was taken down promote
-    * the minimum surviving id, which INHERITS the old rep's token set
-    * and band keys (every member of a content group has the IDENTICAL
-    * token set — that is what the group means — so signatures and
-    * bands carry over exactly); groups emptied by the takedown leave
-    * the band index entirely. On a from-scratch index the result
-    * equals [[minhashIndex]] over the reduced corpus frame-for-frame
-    * (IndexRemoveSpec pins it); nothing is re-tokenized or
-    * re-signatured, and only the takedown's own groups are touched —
-    * O(affected), not O(corpus). Unknown ids are no-ops. */
+    * analogue of the tile table's row-level delete;
+    * [[BandedIndex.remove]]): a promoted representative inherits the
+    * group's token set and band keys, emptied groups leave the band
+    * index; the result equals [[minhashIndex]] over the reduced corpus
+    * frame-for-frame. */
   def minhashIndexRemove(index: MinhashIndex, removeIds: DataFrame,
       idCol: String): MinhashIndex = {
-    val ids = removeIds.select(col(idCol).as("id")).distinct()
-    val affected = index.members.join(broadcast(ids), Seq("id"))
-      .select("ckey").distinct()
-    val survivors = index.members.join(broadcast(ids), Seq("id"),
-      "left_anti")
-    // new representative per affected group (min surviving id — the
-    // from-scratch rule); an affected group absent here was emptied
-    val newReps = survivors.join(broadcast(affected), Seq("ckey"))
-      .groupBy("ckey").agg(min("id").as("nrid"))
-    val members2 = survivors
-      .join(broadcast(newReps), Seq("ckey"), "left")
-      .select(col("id"), col("ckey"),
-        coalesce(col("nrid"), col("rid")).as("rid"))
-    // old-rep → new-rep transition map, keyed by the old rep id
-    // (rep ids are unique across groups: a rep is a member of exactly
-    // one group). touched=true rows with null nrid mark emptied
-    // groups — their index rows drop; untouched rows pass through.
-    val trans = index.members.join(broadcast(affected), Seq("ckey"))
-      .select("ckey", "rid").distinct()
-      .join(broadcast(newReps), Seq("ckey"), "left")
-      .select(col("rid").as("id"), col("nrid"), lit(true).as("touched"))
-    def rekey(df: DataFrame, payload: String): DataFrame = df
-      .join(broadcast(trans), Seq("id"), "left")
-      .where(col("touched").isNull || col("nrid").isNotNull)
-      .select(coalesce(col("nrid"), col("id")).as("id"), col(payload))
-    index.copy(members = members2,
-      repToks = rekey(index.repToks, "toks"),
-      repBands = rekey(index.repBands, "band_key"))
+    val (members, rekey) = BandedIndex.remove(index.members, removeIds,
+      idCol, "rid", Some("id"))
+    index.copy(members = members, repToks = rekey(index.repToks, "id"),
+      repBands = rekey(index.repBands, "id"))
   }
 
   /** Incremental MinHash-LSH near-dedup: all verified near-dup pairs
@@ -795,85 +695,28 @@ object TextOps {
     * INVOLVING AT LEAST ONE document of `newDocs`, given the
     * [[MinhashIndex]] of the existing corpus — value-identical to
     * running [[minhashDedup]] over corpus ∪ batch and keeping the
-    * pairs that touch the batch (the q_minhash_incr oracle pins
-    * exactly that equivalence), at the cost of the BATCH, not the
-    * corpus.
-    *
-    * Only three rep populations are ever banded or verified:
-    * genuinely-new contents (batch ckeys absent from the corpus),
-    * the corpus representatives of groups the batch GAINED members in
-    * (their new members inherit the group's whole neighborhood — the
-    * subtle case: a batch doc exactly duplicating old content must
-    * still pair with that content's near-dups), and the corpus index
-    * itself as the static join target. Left side is batch-sized,
-    * right side is the saved index joined on band_key; nothing
-    * re-signatures the corpus. Member expansion keeps only pairs with
-    * a batch doc on at least one side, so previously-reported
-    * corpus-internal pairs are never re-emitted. */
+    * pairs that touch the batch, at the cost of the BATCH, not the
+    * corpus ([[BandedIndex]] incremental candidates and member
+    * expansion; the fresh reps' token sets verify beside the saved
+    * ones). The resolved batch, the band universe, the token sets and
+    * the flagged members are each read several times, so they are
+    * cached. */
   def minhashDedupIncremental(index: MinhashIndex, newDocs: DataFrame,
       idCol: String, textCol: String, minJaccard: Double,
       maxBandFreq: Int = Int.MaxValue): DataFrame = {
-    val spark = newDocs.sparkSession
-    def reg(d: DataFrame): DataFrame = {
-      d.persist()
-      graft.engine.Caches.register(spark, () => { d.unpersist(false); () })
-      d
-    }
-    // global content resolution: a batch ckey found in the corpus
-    // joins that group (rid = the CORPUS representative)
-    val (newMembersRaw, freshRepIds, freshToks) =
-      resolveBatch(index, newDocs, idCol, textCol)
-    val newMembers = reg(newMembersRaw)
-    val freshBands = signatureBands(freshToks, index.numHashes,
-      index.numBands)
-    val gainedRepIds = newMembers.where(col("joined_corpus"))
-      .select(col("rid").as("id")).distinct()
-    // band universe = saved index + fresh reps; the frequency cap
-    // must see the UNION so a bucket is kept/dropped for both sides
-    val kept = reg(Lsh.spreadBands(Lsh.capBandBuckets(
-      index.repBands.unionByName(freshBands), "band_key", maxBandFreq,
-      "minhash-incr"), saltById = false))
-    val leftIds = freshRepIds.unionByName(gainedRepIds)
-    val cand = kept.join(leftIds, Seq("id"))
-      .select(col("band_key"), col("id").as("id_l"))
-      .join(kept.select(col("band_key"), col("id").as("id_r")),
-        Seq("band_key"))
-      .where(col("id_l") =!= col("id_r"))
-      .select(least(col("id_l"), col("id_r")).as("id_a"),
-        greatest(col("id_l"), col("id_r")).as("id_b"))
-      .distinct()
-    val allToks = reg(index.repToks.unionByName(freshToks))
-    val verified = verifyJaccard(cand, allToks, minJaccard)
-      .select(col("id_a").as("rid_a"), col("id_b").as("rid_b"),
-        col("jaccard"))
-    val allMembers = reg(index.members.select(col("id"), col("ckey"),
-      col("rid")).withColumn("is_new", lit(false))
-      .unionByName(newMembers.select(col("id"), col("ckey"), col("rid"))
-        .withColumn("is_new", lit(true))))
-    // cross-group expansion, batch-touching pairs only
-    val cross = verified
-      .join(allMembers.select(col("rid").as("rid_a"), col("id").as("ma"),
-        col("is_new").as("na")), Seq("rid_a"))
-      .join(allMembers.select(col("rid").as("rid_b"), col("id").as("mb"),
-        col("is_new").as("nb")), Seq("rid_b"))
-      .where(col("na") || col("nb"))
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-    // intra-group: exact duplicates (jaccard 1.0) with a batch member.
-    // The BATCH side drives the join (never allMembers ⋈ allMembers —
-    // that is a corpus-sized shuffle per ingest batch; this is
-    // batch × group-members, shuffle-free against a ckey-bucketed
-    // saved index). distinct folds the two orientations of
-    // batch-batch pairs; it runs on the output-sized intra set.
-    val intra = newMembers.select(col("ckey"), col("id").as("id_n"))
-      .join(allMembers.select(col("ckey"), col("id").as("id_m")),
-        Seq("ckey"))
-      .where(col("id_n") =!= col("id_m") && lit(1.0) >= minJaccard)
-      .select(least(col("id_n"), col("id_m")).as("id_a"),
-        greatest(col("id_n"), col("id_m")).as("id_b"),
-        lit(1.0).as("jaccard"))
-      .distinct()
-    intra.unionByName(cross)
+    import graft.engine.Caches
+    val (resolved, freshToks) = resolveBatch(index, newDocs, idCol, textCol)
+    val newMembers = Caches.persist(resolved)
+    val universe = Caches.persist(BandedIndex.bandUniverse(index.repBands,
+      signatureBands(freshToks, index.numHashes, index.numBands),
+      "band_key", maxBandFreq, "minhash-incr"))
+    val cand = BandedIndex.candidates(universe, newMembers, "rid", "id",
+      "band_key")
+    val allToks = Caches.persist(index.repToks.unionByName(freshToks))
+    val allMembers = Caches.persist(
+      BandedIndex.withBatch(index.members, newMembers))
+    jaccardMemberPairs(verifyJaccard(cand, allToks, minJaccard),
+      allMembers, col("is_new"), minJaccard)
   }
 
   // ---- Winnowing document fingerprints ----------------------------
@@ -981,9 +824,8 @@ object TextOps {
       maxDocFreq: Int): DataFrame = {
     // consumed three times (doc-freq filter + both join sides) —
     // cache the fingerprint pass, released via the session registry
-    val fps = fps0.select(col("id"), col("fp")).distinct().persist()
-    graft.engine.Caches.register(fps0.sparkSession,
-      () => { fps.unpersist(false); () })
+    val fps = graft.engine.Caches.persist(
+      fps0.select(col("id"), col("fp")).distinct())
     val rare = fps.groupBy("fp")
       .agg(count(lit(1)).as("ndocs")) // fps is distinct on (id, fp)
       .where(col("ndocs") <= maxDocFreq)

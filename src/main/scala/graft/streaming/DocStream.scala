@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import graft.operators.{ImageOps, IndexStore, Similarity, TextOps}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming document ingest for a training-data pipeline — beyond
@@ -75,19 +76,13 @@ object DocStream {
   def incrementalDedupSink(indexDir: String, pairsDir: String,
       idCol: String, textCol: String, numHashes: Int, numBands: Int,
       minJaccard: Double,
-      writerId: String = "default"): (DataFrame, Long) => Unit = {
-    import graft.operators.TextOps
-    versionedIndexSink[TextOps.MinhashIndex](indexDir, pairsDir,
-      writerId,
-      emptyOf = batch => TextOps.minhashIndex(batch.limit(0),
-        idCol, textCol, numHashes, numBands),
-      load = (spark, dir) => TextOps.loadMinhashIndex(spark, dir),
-      dedup = (idx, batch) => TextOps.minhashDedupIncremental(idx,
-        batch, idCol, textCol, minJaccard),
-      append = (idx, batch) => TextOps.minhashIndexAppend(idx, batch,
-        idCol, textCol),
-      save = (idx, dir) => idx.save(dir))
-  }
+      writerId: String = "default"): (DataFrame, Long) => Unit =
+    versionedIndexSink[TextOps.MinhashIndex](indexDir, pairsDir, writerId,
+      TextOps.loadMinhashIndex,
+      b => TextOps.minhashIndex(b.limit(0), idCol, textCol, numHashes,
+        numBands),
+      TextOps.minhashDedupIncremental(_, _, idCol, textCol, minJaccard),
+      TextOps.minhashIndexAppend(_, _, idCol, textCol))
 
   /** [[incrementalDedupSink]] for the EMBEDDING modality: each
     * micro-batch near-dedups against the persisted
@@ -97,19 +92,12 @@ object DocStream {
   def srpIncrementalDedupSink(indexDir: String, pairsDir: String,
       idCol: String, vecCol: String, dim: Int, numPlanes: Int,
       threshold: Double,
-      writerId: String = "default"): (DataFrame, Long) => Unit = {
-    import graft.operators.Similarity
-    versionedIndexSink[Similarity.SrpIndex](indexDir, pairsDir,
-      writerId,
-      emptyOf = batch => Similarity.srpIndex(batch.limit(0),
-        idCol, vecCol, dim, numPlanes),
-      load = (spark, dir) => Similarity.loadSrpIndex(spark, dir),
-      dedup = (idx, batch) => Similarity.srpNearDupIncremental(idx,
-        batch, idCol, vecCol, threshold),
-      append = (idx, batch) => Similarity.srpIndexAppend(idx, batch,
-        idCol, vecCol),
-      save = (idx, dir) => idx.save(dir))
-  }
+      writerId: String = "default"): (DataFrame, Long) => Unit =
+    versionedIndexSink[Similarity.SrpIndex](indexDir, pairsDir, writerId,
+      Similarity.loadSrpIndex,
+      b => Similarity.srpIndex(b.limit(0), idCol, vecCol, dim, numPlanes),
+      Similarity.srpNearDupIncremental(_, _, idCol, vecCol, threshold),
+      Similarity.srpIndexAppend(_, _, idCol, vecCol))
 
   /** [[incrementalDedupSink]] for the IMAGE modality: each
     * micro-batch near-dedups against the persisted
@@ -119,19 +107,12 @@ object DocStream {
   def dhashIncrementalDedupSink(indexDir: String, pairsDir: String,
       idCol: String, dhCol: String, bands: Int, bitsPerBand: Int,
       maxHamming: Int,
-      writerId: String = "default"): (DataFrame, Long) => Unit = {
-    import graft.operators.ImageOps
-    versionedIndexSink[ImageOps.DhashIndex](indexDir, pairsDir,
-      writerId,
-      emptyOf = batch => ImageOps.dhashIndex(batch.limit(0),
-        idCol, dhCol, bands, bitsPerBand),
-      load = (spark, dir) => ImageOps.loadDhashIndex(spark, dir),
-      dedup = (idx, batch) => ImageOps.dhashNearDupIncremental(idx,
-        batch, idCol, dhCol, maxHamming),
-      append = (idx, batch) => ImageOps.dhashIndexAppend(idx, batch,
-        idCol, dhCol),
-      save = (idx, dir) => idx.save(dir))
-  }
+      writerId: String = "default"): (DataFrame, Long) => Unit =
+    versionedIndexSink[ImageOps.DhashIndex](indexDir, pairsDir, writerId,
+      ImageOps.loadDhashIndex,
+      b => ImageOps.dhashIndex(b.limit(0), idCol, dhCol, bands, bitsPerBand),
+      ImageOps.dhashNearDupIncremental(_, _, idCol, dhCol, maxHamming),
+      ImageOps.dhashIndexAppend(_, _, idCol, dhCol))
 
   /** Takedown sink, TEXT modality: each micro-batch of removal
     * requests (rows carrying `idCol`) is applied to the latest marked
@@ -145,63 +126,51 @@ object DocStream {
     * removal logs). Same crash/replay story as the add sink; the
     * one-writer-at-a-time rule covers BOTH sinks together (serialize
     * an add stream and a takedown stream externally — e.g. route
-    * takedowns through the same foreachBatch query). */
+    * takedowns through the same foreachBatch query). A chain whose
+    * first batch is a takedown publishes an empty `v1` built from the
+    * STREAM's columns, so it carries the stream's real id type. */
   def minhashTakedownSink(indexDir: String, logDir: String,
       idCol: String, numHashes: Int, numBands: Int,
-      writerId: String = "takedown"): (DataFrame, Long) => Unit = {
-    import graft.operators.TextOps
-    versionedIndexSink[TextOps.MinhashIndex](indexDir, logDir, writerId,
-      emptyOf = batch => TextOps.minhashIndex(
-        batch.limit(0).withColumn("text",
-          org.apache.spark.sql.functions.lit(null: String)),
-        idCol, "text", numHashes, numBands),
-      load = (spark, dir) => TextOps.loadMinhashIndex(spark, dir),
-      dedup = (_, batch) => batch.select(col(idCol).as("removed_id")),
-      append = (idx, batch) => TextOps.minhashIndexRemove(idx, batch,
-        idCol),
-      save = (idx, dir) => idx.save(dir))
-  }
+      writerId: String = "takedown"): (DataFrame, Long) => Unit =
+    takedownSink[TextOps.MinhashIndex](indexDir, logDir, writerId, idCol,
+      TextOps.loadMinhashIndex,
+      b => TextOps.minhashIndex(noRows(b, "text", "string"), idCol, "text",
+        numHashes, numBands),
+      TextOps.minhashIndexRemove(_, _, idCol))
 
   /** [[minhashTakedownSink]] for the EMBEDDING modality. */
   def srpTakedownSink(indexDir: String, logDir: String, idCol: String,
       dim: Int, numPlanes: Int,
-      writerId: String = "takedown"): (DataFrame, Long) => Unit = {
-    import graft.operators.Similarity
-    versionedIndexSink[Similarity.SrpIndex](indexDir, logDir, writerId,
-      // derive the empty frame from the STREAM (batch.limit(0)) like
-      // every other sink, so a chain whose first batch is a takedown
-      // publishes v1 with the stream's real id type, not a hardcoded
-      // long
-      emptyOf = batch => Similarity.SrpIndex(
-        batch.limit(0).select(col(idCol).as("id"))
-          .withColumn("v", org.apache.spark.sql.functions
-            .lit(null).cast("array<float>"))
-          .withColumn("bucket", org.apache.spark.sql.functions
-            .lit(null).cast("long")),
+      writerId: String = "takedown"): (DataFrame, Long) => Unit =
+    takedownSink[Similarity.SrpIndex](indexDir, logDir, writerId, idCol,
+      Similarity.loadSrpIndex,
+      b => Similarity.srpIndex(noRows(b, "v", "array<float>"), idCol, "v",
         dim, numPlanes),
-      load = (spark, dir) => Similarity.loadSrpIndex(spark, dir),
-      dedup = (_, batch) => batch.select(col(idCol).as("removed_id")),
-      append = (idx, batch) => Similarity.srpIndexRemove(idx, batch,
-        idCol),
-      save = (idx, dir) => idx.save(dir))
-  }
+      Similarity.srpIndexRemove(_, _, idCol))
 
   /** [[minhashTakedownSink]] for the IMAGE modality. */
   def dhashTakedownSink(indexDir: String, logDir: String, idCol: String,
       bands: Int, bitsPerBand: Int,
-      writerId: String = "takedown"): (DataFrame, Long) => Unit = {
-    import graft.operators.ImageOps
-    versionedIndexSink[ImageOps.DhashIndex](indexDir, logDir, writerId,
-      emptyOf = batch => ImageOps.dhashIndex(
-        batch.limit(0).withColumn("dh",
-          org.apache.spark.sql.functions.lit(0L)),
-        idCol, "dh", bands, bitsPerBand),
-      load = (spark, dir) => ImageOps.loadDhashIndex(spark, dir),
-      dedup = (_, batch) => batch.select(col(idCol).as("removed_id")),
-      append = (idx, batch) => ImageOps.dhashIndexRemove(idx, batch,
-        idCol),
-      save = (idx, dir) => idx.save(dir))
-  }
+      writerId: String = "takedown"): (DataFrame, Long) => Unit =
+    takedownSink[ImageOps.DhashIndex](indexDir, logDir, writerId, idCol,
+      ImageOps.loadDhashIndex,
+      b => ImageOps.dhashIndex(noRows(b, "dh", "long"), idCol, "dh", bands,
+        bitsPerBand),
+      ImageOps.dhashIndexRemove(_, _, idCol))
+
+  /** No rows of `batch`, plus a typed null `name` column. */
+  private def noRows(batch: DataFrame, name: String,
+      tpe: String): DataFrame =
+    batch.limit(0).withColumn(name, lit(null).cast(tpe))
+
+  /** The takedown binding of [[versionedIndexSink]]: the batch's ids
+    * are the log, removal is the fold. */
+  private def takedownSink[I <: IndexStore.Persisted](indexDir: String,
+      logDir: String, writerId: String, idCol: String,
+      load: (SparkSession, String) => I, emptyOf: DataFrame => I,
+      remove: (I, DataFrame) => I): (DataFrame, Long) => Unit =
+    versionedIndexSink[I](indexDir, logDir, writerId, load, emptyOf,
+      (_, b) => b.select(col(idCol).as("removed_id")), remove)
 
   /** GC for a versioned index chain: retire `v<seq>` dirs older than
     * (latest marked seq − retain + 1). The latest marked version and
@@ -216,19 +185,11 @@ object DocStream {
     * exist. Returns what was deleted. */
   def vacuumIndexVersions(indexDir: String, retain: Int = 2,
       graceMs: Long = 10 * 60 * 1000L): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     require(retain >= 1, "retain must be >= 1 (the latest version)")
     val base = java.nio.file.Paths.get(indexDir)
     if (!java.nio.file.Files.isDirectory(base)) return Nil
-    val names = {
-      val s = java.nio.file.Files.list(base)
-      try s.iterator().asScala.map(_.getFileName.toString).toList
-      finally s.close()
-    }
-    val maxMarked = names.filter(_.startsWith("done-"))
-      .flatMap(m => scala.util.Try(java.nio.file.Files
-        .readString(base.resolve(m)).trim.toLong).toOption)
-      .maxOption.getOrElse(return Nil)
+    val names = entries(base)
+    val maxMarked = maxMarkedSeq(base, names).getOrElse(return Nil)
     val cutoff = System.currentTimeMillis() - graceMs
     val victims = names.filter(_.startsWith("v")).flatMap { n =>
       n.drop(1).toLongOption.map(n -> _)
@@ -244,20 +205,34 @@ object DocStream {
     victims.sorted
   }
 
+  /** The entry names of directory `base`. */
+  private def entries(base: java.nio.file.Path): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(base)
+    try s.iterator().asScala.map(_.getFileName.toString).toList
+    finally s.close()
+  }
+
+  /** The latest seq any writer's marker among `names` published. */
+  private def maxMarkedSeq(base: java.nio.file.Path,
+      names: List[String]): Option[Long] =
+    names.filter(_.startsWith("done-"))
+      .flatMap(m => scala.util.Try(java.nio.file.Files
+        .readString(base.resolve(m)).trim.toLong).toOption)
+      .maxOption
+
   /** The modality-agnostic versioned-index foreachBatch protocol the
-    * three sinks share (docstring on [[incrementalDedupSink]]):
+    * six sinks share (docstring on [[incrementalDedupSink]]):
     * dedup the batch against the latest MARKED index version, write
     * the batch's pairs to a batch-deterministic overwrite path, save
     * the grown index as the next version, then publish the
     * writer-scoped marker LAST by atomic rename. */
-  private def versionedIndexSink[I](indexDir: String, pairsDir: String,
-      writerId: String,
+  private def versionedIndexSink[I <: IndexStore.Persisted](
+      indexDir: String, pairsDir: String, writerId: String,
+      load: (SparkSession, String) => I,
       emptyOf: DataFrame => I,
-      load: (org.apache.spark.sql.SparkSession, String) => I,
       dedup: (I, DataFrame) => DataFrame,
-      append: (I, DataFrame) => I,
-      save: (I, String) => Unit): (DataFrame, Long) => Unit = {
-    import scala.jdk.CollectionConverters._
+      append: (I, DataFrame) => I): (DataFrame, Long) => Unit = {
     // '-' is allowed (streaming query ids are UUIDs — the documented
     // writerId source): markers are matched by EXACT filename and the
     // published seq is read from marker CONTENT, never parsed out of
@@ -275,12 +250,9 @@ object DocStream {
       // 'batch-<id>.done'): its versions are invisible to this
       // protocol, so continuing would silently dedup against an
       // EMPTY corpus and forget every indexed document
-      val legacy = {
-        val s = java.nio.file.Files.list(base)
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .find(n => n.startsWith("batch-") && n.endsWith(".done"))
-        finally s.close()
-      }
+      val names = entries(base)
+      val legacy = names.find(n =>
+        n.startsWith("batch-") && n.endsWith(".done"))
       require(legacy.isEmpty,
         s"$indexDir holds pre-writer-scoped dedup state " +
           s"('${legacy.get}'): rebuild the index (re-feed the corpus " +
@@ -293,15 +265,7 @@ object DocStream {
         // latest marked index version across ALL writers — markers
         // carry the seq they published, so the chain survives a
         // fresh-checkpoint restart under a new writer id
-        val maxSeq = {
-          val s = java.nio.file.Files.list(base)
-          try s.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("done-"))
-            .flatMap(m => scala.util.Try(java.nio.file.Files
-              .readString(base.resolve(m)).trim.toLong).toOption)
-            .maxOption
-          finally s.close()
-        }
+        val maxSeq = maxMarkedSeq(base, names)
         val idx = maxSeq match {
           case None => emptyOf(batch)
           case Some(sq) => load(spark, s"$indexDir/v$sq")
@@ -310,12 +274,9 @@ object DocStream {
           .write.mode("overwrite")
           .parquet(s"$pairsDir/$writerId-batch-$batchId")
         val seq = maxSeq.getOrElse(0L) + 1
-        save(append(idx, batch), s"$indexDir/v$seq")
+        append(idx, batch).save(s"$indexDir/v$seq")
         // marker LAST, atomically: content = the published seq
-        val tmp = base.resolve(s".done-$writerId-$batchId.tmp")
-        java.nio.file.Files.writeString(tmp, seq.toString)
-        java.nio.file.Files.move(tmp, marker,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        graft.engine.AtomicFile.write(marker, seq.toString)
         graft.engine.Caches.drain(spark)
         ()
       }

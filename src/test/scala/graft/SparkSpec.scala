@@ -7,6 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  def countingJobs[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -400,4 +400,18 @@ class JobCsvSpec extends SparkSpec {
     assert(lines.head.startsWith("grp,"))
     assert(lines.length === 9) // header + 8 groups
   }
+
+  test("zone layer load runs one Spark job, the collect: its schema " +
+      "comes from the footer, not an inference job") {
+    val path = Files.createTempDirectory("graft-zone-load")
+      .resolve("zones.parquet").toString
+    val zones = Fixtures.zonesBasic(grid)
+    ZoneStore.write(spark, zones, "grp_field", path)
+    val (loaded, jobs) = countingJobs(ZoneStore.load(spark, path,
+      "grp_field"))
+    assert(jobs === 1)
+    def key(zs: Seq[graft.geom.Zone]) =
+      zs.map(z => (z.fid, z.group, graft.geom.Zone.toWkb(z.geom).toSeq))
+    assert(key(loaded) === key(zones))
+  }
 }
