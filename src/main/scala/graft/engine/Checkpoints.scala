@@ -2,7 +2,7 @@ package graft.engine
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.functions.{XXHash64, ZonalPartialsGen}
-import graft.geom.{Zone, ZoneIndex}
+import graft.geom.Zone
 import graft.operators.{ZonalEngine, ZonalStats}
 import graft.operators.ZonalStats.FidStatRow
 import graft.sources.{TileFileStat, TileManifest, TileTable}
@@ -44,21 +44,15 @@ import java.nio.file.{Files, Path, Paths}
   * merged. The merge yields driver-side per-FID rows, which feed the
   * engine's one driver-side rollup ([[ZonalEngine.finishStats]]);
   * interrupted runs resume to identical results.
+  *
+  * The run's head is the engine's too: the zones are simplified,
+  * indexed and broadcast once ([[ZonalEngine.ZoneRun]], released with
+  * the run's other caches), the table is addressed as one band
+  * ([[ZonalEngine.BandScan]]), and both merges fold with the one
+  * per-FID monoid ([[ZonalStats.foldFidRows]]).
   */
 object Checkpoints {
   private val mapper = new ObjectMapper()
-  // Hadoop conf for fingerprint stats: prefer the Spark session's
-  // (it carries spark.hadoop.* — s3a credentials/endpoints, kerberos —
-  // without which remote getFileStatus fails and the size guard would
-  // silently degrade); the bare-Configuration fallback is cached
-  // because constructing one re-parses the default XMLs (tens of ms)
-  private lazy val fallbackHadoopConf =
-    new org.apache.hadoop.conf.Configuration()
-  private def hadoopConf: org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(fallbackHadoopConf)
 
   /** Default chunk-count cap — shared with verification code that
     * re-derives chunk indices (keep in sync by REFERENCE, not copy). */
@@ -119,9 +113,13 @@ object Checkpoints {
     * including each file's on-disk byte size (regenerating a table in
     * place with identical cell stats but different content then
     * invalidates the checkpoint instead of silently reusing it).
-    * Recorded in lineage.json; resume recomputes on mismatch. */
-  def fingerprint(ctx: String, files: Seq[TileFileStat],
-      root: String): String = {
+    * Recorded in lineage.json; resume recomputes on mismatch.
+    *
+    * @param hadoopConf the session's Hadoop conf: it carries
+    *   spark.hadoop.* (s3a credentials/endpoints, kerberos), without
+    *   which a remote stat fails and the size guard silently degrades */
+  def fingerprint(ctx: String, files: Seq[TileFileStat], root: String,
+      hadoopConf: org.apache.hadoop.conf.Configuration): String = {
     // Hadoop FileSystem stat, so the byte-size guard works for any
     // root the table can live on (local, hdfs://, s3a://), not just
     // java.nio-visible paths
@@ -149,11 +147,11 @@ object Checkpoints {
     lineageField(ckptDir, i, "fingerprint").contains(expectedFp)
 
   /** Run the per-FID partial-stats stage chunk by chunk with
-    * checkpointing; returns the merged per-FID stats as driver-side
-    * rows (zone-cardinality — the engine's broadcastable-zones
-    * assumption), the percentile value-chunk frame (fid, vals) when
-    * `collectValues`, and the number of chunks actually (re)computed
-    * this run.
+    * checkpointing over `files`, against the zones `zr` prepared;
+    * returns the merged per-FID stats as driver-side rows
+    * (zone-cardinality — the engine's broadcastable-zones assumption)
+    * and, when `collectValues`, the percentile value-chunk frame
+    * (fid, vals).
     *
     * Each chunk costs exactly one Spark job (see the object doc). The
     * non-percentile path pre-aggregates per (scan partition, fid) in
@@ -164,36 +162,16 @@ object Checkpoints {
     * every chunk's partials with their known schema (no footer
     * inference), collects the per-FID stats ONCE, and hands the value
     * chunks on for the group percentiles. Driver memory for the merge
-    * is O(chunks × zones).
-    *
-    * @param filesOverride restrict the run to these manifest files
-    *   (e.g. [[graft.sources.TileTable.prunedFiles]] of the zones'
-    *   envelope) instead of the full table.
-    * @param band for multi-band tables: the single band this run
-    *   addresses (reference rasters are `(path, band)`,
-    *   runner.py:264-265) — the chunk scan filters it and the band's
-    *   own nodata applies; REQUIRED when the table is multi-band, or
-    *   the scan would mix every band's rows. */
-  def chunkedFidStats(spark: SparkSession, table: TileTable,
-      zones: Seq[Zone], ckptDir: String, runId: String,
-      collectValues: Boolean = false,
-      maxChunks: Int = DefaultMaxChunks,
-      lastWins: Boolean = false,
-      filesOverride: Option[Seq[TileFileStat]] = None,
-      band: Option[Int] = None)
-      : (Seq[FidStatRow], Option[DataFrame], Int) = {
-    require(table.manifest.bands.isEmpty || band.isDefined,
-      s"${table.root} is multi-band: pass the band to address")
-    val idx = new ZoneIndex(zones.toArray)
-    val bc = spark.sparkContext.broadcast(idx)
-    val grid = table.grid
-    val nodata = table.nodataFor(band)
-    val chunks = chunkFiles(filesOverride.getOrElse(table.manifest.files),
-      maxChunks)
-    val ctx = contextDigest(zones, table.manifest, collectValues) +
+    * is O(chunks × zones). */
+  private def chunkedFidStats(spark: SparkSession, scan: ZonalEngine.BandScan,
+      zr: ZonalEngine.ZoneRun, files: Seq[TileFileStat], ckptDir: String,
+      runId: String, collectValues: Boolean, maxChunks: Int,
+      lastWins: Boolean): (Seq[FidStatRow], Option[DataFrame]) = {
+    val table = scan.table
+    val chunks = chunkFiles(files, maxChunks)
+    val ctx = contextDigest(zr.zones, table.manifest, collectValues) +
       (if (lastWins) "|lastWins" else "") +
-      band.map(b => s"|band=$b").getOrElse("")
-    val computed = new java.util.concurrent.atomic.AtomicInteger(0)
+      scan.band.map(b => s"|band=$b").getOrElse("")
 
     // Chunks are independent Spark jobs; submitting them from a
     // bounded pool keeps several in flight so per-job fixed costs
@@ -203,7 +181,8 @@ object Checkpoints {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
 
     def runChunk(files: Seq[TileFileStat], i: Int): Unit = {
-      val fp = fingerprint(ctx, files, table.root)
+      val fp = fingerprint(ctx, files, table.root,
+        spark.sparkContext.hadoopConfiguration)
       if (!isChunkDone(ckptDir, i, fp)) {
         val t0 = System.nanoTime()
         val dir = chunkDir(ckptDir, i)
@@ -211,17 +190,14 @@ object Checkpoints {
         // bypasses table.read(), so it must fold the deletes itself;
         // scanRaw also pins the TABLE schema (evolution defaults, no
         // per-file footer inference)
-        val raw = table.applyDeletes(spark,
-          table.scanRaw(spark, files.map(_.path)))
-        val tiles = band.map(b => raw.where(col("band") === b))
-          .getOrElse(raw)
+        val tiles = scan.rows(table.applyDeletes(spark,
+          table.scanRaw(spark, files.map(_.path))))
         if (collectValues) {
           // percentile runs need the raw value chunks: the kernel pass
           // writes them directly, and the chunk totals ride on the
           // same job as observed metrics
           val obs = org.apache.spark.sql.Observation()
-          ZonalStats.tilePartials(tiles, bc, grid, nodata,
-              collectValues = true, lastWins)
+          zr.partials(tiles, collectValues = true, lastWins)
             .observe(obs, count(lit(1)).as("rows"),
               coalesce(sum("cnt"), lit(0L)).as("pixels"))
             .write.mode("overwrite").parquet(s"$dir/partials")
@@ -238,15 +214,10 @@ object Checkpoints {
           // protocol — the chunk's cost is the kernel, full stop.
           // The (partition, fid) ordering fixes the float64 merge
           // order, so resumed and fresh runs are bit-identical.
-          val rows = ZonalStats.tilePartials(tiles, bc, grid, nodata,
-              collectValues = false, lastWins)
-            .toDF()
+          val rows = zr.partials(tiles, collectValues = false, lastWins)
             .withColumn("_part", spark_partition_id())
             .groupBy("_part", "fid")
-            .agg(count(lit(1)).as("nrows"), sum("cnt").as("cnt"),
-              sum("nodata").as("nodata"), min("mn").as("mn"),
-              max("mx").as("mx"), sum("sum").as("sum"),
-              sum("sumsq").as("sumsq"))
+            .agg(count(lit(1)).as("nrows"), ZonalStats.fidAggs: _*)
             .collect()
             .sortBy(r => (r.getInt(0), r.getLong(1)))
           val metrics = rows.groupBy(_.getInt(0)).toSeq.map {
@@ -255,22 +226,15 @@ object Checkpoints {
           }.toArray
           val byFid = scala.collection.mutable.LinkedHashMap
             .empty[Long, FidStatRow]
-          rows.foreach { r =>
-            val fid = r.getLong(1)
-            val s = byFid.getOrElseUpdate(fid,
-              FidStatRow(fid, 0L, 0L, Double.PositiveInfinity,
-                Double.NegativeInfinity, 0.0, 0.0))
-            byFid(fid) = FidStatRow(fid,
-              s.cnt + r.getLong(3), s.nodata + r.getLong(4),
-              math.min(s.mn, r.getDouble(5)), math.max(s.mx, r.getDouble(6)),
-              s.sum + r.getDouble(7), s.sumsq + r.getDouble(8))
-          }
+          ZonalStats.foldFidRows(byFid, rows.iterator.map(r =>
+            FidStatRow(r.getLong(1), r.getLong(3), r.getLong(4),
+              r.getDouble(5), r.getDouble(6), r.getDouble(7),
+              r.getDouble(8))), fromZero = true)
           writeChunkStats(dir, byFid.values.toSeq.sortBy(_.fid))
           writeLineage(dir, i, files, fp, runId,
             (System.nanoTime() - t0) / 1e6, metrics.map(_._2).sum,
             metrics.map(_._3).sum, Some(metrics))
         }
-        computed.incrementAndGet()
       }
     }
 
@@ -285,38 +249,23 @@ object Checkpoints {
     } finally {
       pool.shutdownNow()
       Progress.detach(spark, progress)
-      // chunk outputs live on disk (stats.json / parquet) — nothing
-      // returned below references the zone broadcast, so drop it now
-      // rather than waiting on the ContextCleaner
-      bc.destroy()
     }
 
-    if (chunks.isEmpty) (Nil, None, 0) // fully pruned table
+    if (chunks.isEmpty) (Nil, None) // fully pruned table
     else if (collectValues) {
       val all = spark.read.schema(ZonalPartialsGen.Schema).parquet(
         chunks.indices.map(i => s"${chunkDir(ckptDir, i)}/partials"): _*)
-      val vals = all.select(col("fid"), col("vals"))
-        .where(size(col("vals")) > 0)
-      (ZonalStats.collectFidStats(ZonalStats.fidStats(all)), Some(vals),
-        computed.get())
+      (ZonalStats.collectFidStats(ZonalStats.fidStats(all)),
+        Some(ZonalEngine.valueChunks(all)))
     } else {
       // cross-chunk merge is a driver-side fold over the chunk stats
       // files in chunk order (zone-cardinality rows per chunk) —
       // deterministic float64 order, no Spark job at all
       val byFid = scala.collection.mutable.LinkedHashMap
         .empty[Long, FidStatRow]
-      chunks.indices.foreach { i =>
-        readChunkStats(chunkDir(ckptDir, i)).foreach { s =>
-          val m = byFid.get(s.fid)
-          byFid(s.fid) = m match {
-            case None => s
-            case Some(p) => FidStatRow(s.fid, p.cnt + s.cnt,
-              p.nodata + s.nodata, math.min(p.mn, s.mn),
-              math.max(p.mx, s.mx), p.sum + s.sum, p.sumsq + s.sumsq)
-          }
-        }
-      }
-      (byFid.values.toSeq.sortBy(_.fid), None, computed.get())
+      chunks.indices.foreach(i =>
+        ZonalStats.foldFidRows(byFid, readChunkStats(chunkDir(ckptDir, i))))
+      (byFid.values.toSeq.sortBy(_.fid), None)
     }
   }
 
@@ -366,6 +315,11 @@ object Checkpoints {
     * inputs, including `lastWins` (the INI job path's semantics) and
     * percentiles.
     *
+    * @param band for multi-band tables: the single band this run
+    *   addresses (reference rasters are `(path, band)`,
+    *   runner.py:264-265) — the chunk scan filters it and the band's
+    *   own nodata applies; REQUIRED when the table is multi-band
+    *   ([[ZonalEngine.BandScan]]).
     * @param keepCheckpoints false = the reference's
     *   `clean_working_dir=True` (`runner.py:921-923`): materialize the
     *   result, then delete the checkpoint dir.
@@ -384,27 +338,22 @@ object Checkpoints {
       band: Option[Int] = None,
       fidStatsSink: Option[DataFrame => Unit] = None): DataFrame = {
     val percs = ZonalEngine.normalizePercentiles(percentiles)
-    val zonesSimpl = zones.map(z =>
-      z.copy(geom = Zone.simplifyHalfPixel(z.geom, table.grid.gt.px)))
-    // prune the chunk list to the zones' envelope — a job over a
-    // region touches only that region's files, like the direct path
-    val env = Zone.totalEnvelope(zonesSimpl)
-    val (fidRows, vals, _) = chunkedFidStats(spark, table, zonesSimpl,
-      ckptDir, runId, collectValues = percs.nonEmpty,
-      maxChunks = maxChunks, lastWins = lastWins,
-      filesOverride = Some(table.prunedFiles(env)), band = band)
-    fidStatsSink.foreach(_(ZonalStats.fidStatsFrame(spark, fidRows)))
-    val res = ZonalEngine.finishStats(spark, fidRows, vals, zonesSimpl,
-      table.grid, table.nodataFor(band), percs, exactPercentiles,
-      e => table.readPruned(spark, e, band), histogram = None,
-      tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty))
-    if (keepCheckpoints) res
-    else {
-      // finishStats returns a MATERIALIZED local frame, so the scratch
-      // dir is no longer referenced by any pending computation
-      deleteRecursively(Paths.get(ckptDir))
-      res
+    val scan = new ZonalEngine.BandScan(table, band)
+    val zr = scan.zoneRun(spark, zones)
+    val res = zr.releasing {
+      // prune the chunk list to the zones' envelope — a job over a
+      // region touches only that region's files, like the direct path
+      val (fidRows, vals) = chunkedFidStats(spark, scan, zr,
+        table.prunedFiles(Zone.totalEnvelope(zr.zones)), ckptDir, runId,
+        collectValues = percs.nonEmpty, maxChunks, lastWins)
+      fidStatsSink.foreach(_(ZonalStats.fidStatsFrame(spark, fidRows)))
+      ZonalEngine.finishStats(spark, zr, fidRows, vals, percs,
+        exactPercentiles, histogram = None, scan.fallback(spark))
     }
+    // finishStats returns a MATERIALIZED local frame, so the scratch
+    // dir is no longer referenced by any pending computation
+    if (!keepCheckpoints) deleteRecursively(Paths.get(ckptDir))
+    res
   }
 
   /** Persist a per-FID stats frame (the `fidStats` shape) + the table

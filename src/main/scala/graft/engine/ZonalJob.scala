@@ -29,7 +29,8 @@ object ZonalJob {
     *   RESUMABLE path ([[Checkpoints.resumableZonalStats]]) — the
     *   TaskGraph-memoization analogue (`runner.py:1093-1098`): a
     *   re-run after a crash skips every finished chunk. When None
-    *   (ad-hoc callers), the direct single-pass engine runs. */
+    *   (ad-hoc callers), the direct single-pass engine runs
+    *   ([[ZonalEngine.runTable]]). */
   def singleRaster(spark: SparkSession, table: TileTable, zones: Seq[Zone],
       percentiles: Seq[Double], ckptDir: Option[String] = None): GroupStats = {
     // The reference job path hardcodes polygons_might_overlap=False
@@ -47,12 +48,14 @@ object ZonalJob {
     // CDC window v0→head into the saved stats instead of rescanning
     // the raster. Falls back to the full path loudly when the window
     // has aged out of vacuum retention or crossed an untagged rewrite.
-    val sidecar = ckptDir.map(d => s"$d/fidstats.json")
-    def headFp: String = graft.sources.TileTable
-      .manifestFingerprint(table.root, table.version).getOrElse("")
+    val sidecar = ckptDir.filter(_ => percentiles.isEmpty)
+      .map(d => s"$d/fidstats.json")
+    def saveSidecar(sc: String)(m: org.apache.spark.sql.DataFrame): Unit =
+      Checkpoints.writeFidStatsSidecar(sc, m, table.version,
+        TileTable.manifestFingerprint(table.root, table.version)
+          .getOrElse(""))
     val incremental: Option[org.apache.spark.sql.DataFrame] =
-      if (percentiles.nonEmpty) None
-      else sidecar.flatMap(sc =>
+      sidecar.flatMap(sc =>
         Checkpoints.readFidStatsSidecar(spark, sc).flatMap {
           case (prev, v0, savedFp) =>
             // identity gate: version numbers restart when a table is
@@ -73,8 +76,7 @@ object ZonalJob {
                 .changedSets(table.root, v0, table.version)
               val res = ZonalEngine.runIncremental(spark, table, zones,
                 prev, fromVersion = v0, lastWins = true, band = band,
-                mergedStatsSink = Some(m => Checkpoints
-                  .writeFidStatsSidecar(sc, m, table.version, headFp)))
+                mergedStatsSink = Some(saveSidecar(sc)))
               // job-observable lineage: what the increment scanned
               ckptDir.foreach(d => writeIncrMarker(d, v0, table.version,
                 cs.added.size, cs.removals.size))
@@ -100,18 +102,9 @@ object ZonalJob {
         Checkpoints.resumableZonalStats(spark, table, zones, dir,
           runId = s"job-${System.nanoTime()}", percentiles = percentiles,
           lastWins = true, band = band,
-          fidStatsSink =
-            if (percentiles.nonEmpty) None
-            else sidecar.map(sc => (m: org.apache.spark.sql.DataFrame) =>
-              Checkpoints.writeFidStatsSidecar(sc, m, table.version,
-                headFp)))
-      case None =>
-        ZonalEngine.run(spark,
-          table.readPruned(spark, Zone.totalEnvelope(zones), band),
-          zones, table.grid, table.nodataFor(band),
-          percentiles, lastWins = true,
-          fallbackTiles = Some(env => table.readPruned(spark, env, band)),
-          fallbackHasTiles = Some(env => table.prunedFiles(env).nonEmpty))
+          fidStatsSink = sidecar.map(saveSidecar))
+      case None => ZonalEngine.runTable(spark, table, zones, percentiles,
+        lastWins = true, band = band)
     })
     val pKeys = ZonalEngine.percentileKeys(
       ZonalEngine.normalizePercentiles(percentiles))

@@ -4,7 +4,7 @@ import org.locationtech.jts.algorithm.locate.IndexedPointInAreaLocator
 import org.locationtech.jts.geom._
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.index.strtree.STRtree
-import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
+import org.locationtech.jts.io.{WKBReader, WKBWriter}
 import org.locationtech.jts.simplify.DouglasPeuckerSimplifier
 
 /** A zone feature: the projection the reference extracts from its
@@ -15,10 +15,6 @@ final case class Zone(fid: Long, group: String, geom: Geometry)
 
 object Zone {
   private val gf = new GeometryFactory()
-  def wktReader = new WKTReader(gf)
-
-  def fromWkt(fid: Long, group: String, wkt: String): Zone =
-    Zone(fid, group, wktReader.read(wkt))
 
   def rect(fid: Long, group: String, x0: Double, y0: Double, x1: Double,
       y1: Double): Zone = {
@@ -50,9 +46,9 @@ object Zone {
   }
 }
 
-/** Broadcastable zone index: serializes the zone list; the STRtree and
-  * prepared geometries are rebuilt lazily once per executor JVM
-  * (JTS PreparedGeometry is not serializable). This is the Spark
+/** Broadcastable zone index: serializes the zone list; the STRtree,
+  * point locators and scanline rings are rebuilt lazily once per
+  * executor JVM (JTS indexes are not serializable). This is the Spark
   * replacement for the reference's rasterize join
   * (`runner.py:463-469,596-606`): candidate lookup by envelope, then
   * per-pixel-center containment refinement (= ALL_TOUCHED=FALSE).
@@ -60,7 +56,6 @@ object Zone {
 final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
 
   @transient private var _tree: STRtree = _
-  @transient private var _prepared: Array[PreparedGeometry] = _
   @transient private var _locators: Array[IndexedPointInAreaLocator] = _
   // per zone: all rings (shells + holes across parts) as flat
   // [x0,y0, x1,y1, ...] closed coordinate arrays — the scanline
@@ -77,13 +72,12 @@ final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
   // shared lock per tile serializes the scan stage)
   @transient @volatile private var _ready: Boolean = false
 
-  // Thread-local PreparedGeometry: JTS PreparedPolygon's
-  // getPointLocator/getIntersectionFinder are `synchronized` per
-  // instance, so a SHARED prepared geometry (a continent polygon hit
-  // by every tile task) becomes a contended monitor. Per-thread
-  // instances are lock-free; build cost is tiny relative to the PIP
-  // loop it short-circuits.
-  @transient private lazy val _tlPrepared
+  // Prepared geometries are built on demand, per thread: the zonal
+  // kernels never use one (coversRect + the locators replace them),
+  // and JTS PreparedPolygon's getPointLocator/getIntersectionFinder
+  // are `synchronized` per instance, so a SHARED prepared geometry (a
+  // continent polygon hit by every task) becomes a contended monitor.
+  @transient private lazy val _prepared
       : ThreadLocal[Array[PreparedGeometry]] =
     ThreadLocal.withInitial(() => new Array[PreparedGeometry](zones.length))
 
@@ -99,22 +93,16 @@ final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
   private def buildSync(): Unit = synchronized {
     if (!_ready) {
       val t = new STRtree()
-      val prep = new Array[PreparedGeometry](zones.length)
       val locs = new Array[IndexedPointInAreaLocator](zones.length)
-      val gf = new GeometryFactory()
       var i = 0
       while (i < zones.length) {
         val g = zones(i).geom
         t.insert(g.getEnvelopeInternal, Integer.valueOf(i))
-        prep(i) = PreparedGeometryFactory.prepare(g)
         locs(i) = new IndexedPointInAreaLocator(g)
         // half-pixel simplification can collapse sub-pixel slivers to
         // EMPTY geometries (null-envelope centre) — skip priming those
         val c = g.getEnvelopeInternal.centre()
-        if (c != null) {
-          locs(i).locate(c) // prime locator index
-          prep(i).containsProperly(gf.createPoint(c)) // prime prepared index
-        }
+        if (c != null) locs(i).locate(c) // prime locator index
         i += 1
       }
       t.build()
@@ -144,7 +132,6 @@ final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
         i += 1
       }
       _tree = t
-      _prepared = prep
       _locators = locs
       _rings = rings
       _maxEdges = maxE
@@ -221,8 +208,6 @@ final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
     n
   }
 
-  def size: Int = zones.length
-
   /** Indices of zones whose envelope intersects `env`, ascending (so
     * downstream iteration order is deterministic). */
   def candidates(env: Envelope): Array[Int] = {
@@ -237,14 +222,10 @@ final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
     out
   }
 
-  /** Shared prepared geometry — fine for one-shot driver use; hot
-    * paths should use [[preparedTL]] (see _tlPrepared note). */
-  def prepared(i: Int): PreparedGeometry = { ensure(); _prepared(i) }
-
-  /** Thread-local prepared geometry for executor hot loops. */
-  def preparedTL(i: Int): PreparedGeometry = {
-    ensure()
-    val a = _tlPrepared.get()
+  /** Zone i's prepared geometry, built on first use by the calling
+    * thread (see the `_prepared` note). */
+  def prepared(i: Int): PreparedGeometry = {
+    val a = _prepared.get()
     if (a(i) == null) a(i) = PreparedGeometryFactory.prepare(zones(i).geom)
     a(i)
   }
@@ -255,7 +236,7 @@ final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
   /** Does zone i PROPERLY contain the closed axis-aligned rectangle
     * `env` (strictly in the interior, no boundary contact)? The
     * whole-tile fast-path test of the kernels, replacing
-    * `preparedTL(i).containsProperly(toGeometry(env))`: the prepared
+    * `prepared(i).containsProperly(toGeometry(env))`: the prepared
     * call wrapped the rectangle into segment strings + intersection
     * detectors per (tile, zone) — ~µs and ~KB of garbage each at
     * 10⁶ tiles, ~20% of the kernel stage's CPU in stack samples —
@@ -317,13 +298,5 @@ final class ZoneIndex(val zones: Array[Zone]) extends Serializable {
     val s4 = dx * (maxY - y1) - dy * (minX - x1)
     !((s1 > 0 && s2 > 0 && s3 > 0 && s4 > 0) ||
       (s1 < 0 && s2 < 0 && s3 < 0 && s4 < 0))
-  }
-
-  /** Total envelope of all zones (the vector extent of
-    * `runner.py:417-422`), used for the bbox short-circuit. */
-  lazy val totalEnvelope: Envelope = {
-    val e = new Envelope()
-    zones.foreach(z => e.expandToInclude(z.geom.getEnvelopeInternal))
-    e
   }
 }

@@ -230,11 +230,15 @@ object Similarity {
     * catalog-deployment scale, bucket `assigned` by `list_id` so
     * probes equi-join the stored layout shuffle-free.
     * The serving-time shape of IVF at corpus scale: train once
-    * (KMeans), assign incrementally forever. */
+    * (KMeans), assign incrementally forever.
+    *
+    * @param refIndex the codebook as the `ivf_nearest` node's reference
+    *   object — built once and handed on by every derived index, so a
+    *   plan that both assigns and probes ships one copy of it */
   final case class IvfIndex(assigned: DataFrame, centIds: Array[Long],
-      centVecs: Array[Array[Float]]) extends IndexStore.Persisted {
-    private[operators] def refIndex = new graft.functions.IvfCentroids(
-      centIds, centVecs)
+      centVecs: Array[Array[Float]])(
+      private[operators] val refIndex: graft.functions.IvfCentroids)
+      extends IndexStore.Persisted {
     /** Centroid floats persist as raw IEEE-754 bits — the quantizer
       * must round-trip EXACTLY or every future assignment is against
       * a perturbed codebook. */
@@ -268,7 +272,7 @@ object Similarity {
         b += java.lang.Float.intBitsToFloat(x.asInt()))
       vecs += b.result()
     }
-    IvfIndex(s.frames("assigned"), ids.result(), vecs.result())
+    ivfIndexOf(s.frames("assigned"), ids.result(), vecs.result())
   }
 
   /** Build the index: assign every vector to its nearest centroid's
@@ -283,9 +287,13 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
     require(cents.nonEmpty, "centroid table is empty")
-    val idx = IvfIndex(null, cents.map(_._1), cents.map(_._2))
-    idx.copy(assigned = assignLists(idx, df, idCol, vecCol))
+    val idx = ivfIndexOf(null, cents.map(_._1), cents.map(_._2))
+    idx.copy(assigned = assignLists(idx, df, idCol, vecCol))(idx.refIndex)
   }
+
+  private def ivfIndexOf(assigned: DataFrame, ids: Array[Long],
+      vecs: Array[Array[Float]]): IvfIndex =
+    IvfIndex(assigned, ids, vecs)(new graft.functions.IvfCentroids(ids, vecs))
 
   private def assignLists(index: IvfIndex, df: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
@@ -301,13 +309,13 @@ object Similarity {
   def ivfIndexAppend(index: IvfIndex, newDf: DataFrame,
       idCol: String, vecCol: String): IvfIndex =
     index.copy(assigned = index.assigned.unionByName(
-      assignLists(index, newDf, idCol, vecCol)))
+      assignLists(index, newDf, idCol, vecCol)))(index.refIndex)
 
   /** Takedown: per-id rows drop; lists keep their other members. */
   def ivfIndexRemove(index: IvfIndex, removeIds: DataFrame,
       idCol: String): IvfIndex =
     index.copy(assigned = BandedIndex.dropIds(index.assigned, removeIds,
-      idCol))
+      idCol))(index.refIndex)
 
   /** Top-k against the STORED assignment: queries probe their nProbe
     * nearest lists and equi-join the index, without re-assigning any

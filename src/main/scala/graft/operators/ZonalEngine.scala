@@ -2,9 +2,12 @@ package graft.operators
 
 import graft.functions.ImageCodec
 import graft.geom._
+import graft.sources.TileTable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import org.locationtech.jts.geom.Envelope
 
 /** Per-(tile, fid, part) partial over an envelope-fallback window. */
 final case class WinPartial(fid: Long, part: Int, cnt: Long, nodata: Long,
@@ -18,6 +21,14 @@ final case class WinPartial(fid: Long, part: Int, cnt: Long, nodata: Long,
   * replacement) → per-FID hash agg → unset-FID envelope fallback →
   * FID→group rollup with gated min/max → exact numpy percentiles →
   * finalize (population stdev, zero-fill).
+  *
+  * Every zonal path — direct ([[run]], [[runTable]]), checkpointed
+  * ([[graft.engine.Checkpoints]]), incremental ([[runIncremental]]) and
+  * the INI job ([[graft.engine.ZonalJob]]) — shares one head and one
+  * tail: a [[ZoneRun]] prepares the zones (simplify, index, broadcast)
+  * and owns every cache the run pins, a [[BandScan]] resolves a tile
+  * table to the one band it addresses, and [[finishStats]] runs the
+  * fallback, percentiles and driver-side rollup.
   *
   * Replicated reference quirks (SURVEY.md §4): center-point
   * assignment, `np.isclose` nodata, float32 geotransform window math,
@@ -46,36 +57,106 @@ object ZonalEngine {
     * 128² px/tile this is ~68 Gpx — beyond it, concentrating a
     * group's raw values on one reducer (the exact numpy-parity path)
     * stops being a sane default and the mergeable Greenwald-Khanna
-    * sketch takes over. Callers needing bit-parity at any size pass
-    * an explicit override. */
+    * sketch takes over. Callers needing bit-parity at any size call
+    * [[run]] with `exactPercentiles = true`. */
   val ExactPercentileMaxTiles: Long = 4L * 1024 * 1024
 
-  /** true = exact percentiles. Auto mode (None override): exact while
-    * the table is small enough, sketch beyond the threshold. */
-  def choosePercentileMode(tableTiles: Long,
-      exactOverride: Option[Boolean] = None): Boolean =
-    exactOverride.getOrElse(tableTiles <= ExactPercentileMaxTiles)
+  /** true = exact percentiles: exact while the table is small enough,
+    * sketch beyond the threshold. */
+  def choosePercentileMode(tableTiles: Long): Boolean =
+    tableTiles <= ExactPercentileMaxTiles
+
+  /** The zones of one zonal run, prepared once: ½-pixel simplified
+    * (VectorTranslate `simplifyTolerance = pixel_width*0.5`,
+    * runner.py:349-365) unless the caller opts out, indexed, and
+    * broadcast on first use. Every cache the run pins is [[pin]]ned
+    * here and dropped by [[release]]: a long-lived session must not
+    * wait on the ContextCleaner (under ParallelGC + a big heap:
+    * possibly never). */
+  private[graft] final class ZoneRun(spark: SparkSession,
+      zonesRaw: Seq[Zone], val grid: RasterGrid,
+      val nodata: Option[Double], simplify: Boolean = true) {
+    val zones: Seq[Zone] =
+      if (simplify)
+        zonesRaw.map(z => z.copy(geom =
+          Zone.simplifyHalfPixel(z.geom, grid.gt.px)))
+      else zonesRaw
+    lazy val zoneGroups: Seq[(Long, Option[String])] =
+      zones.map(z => (z.fid, Option(z.group)))
+
+    private val releases =
+      scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+
+    lazy val bc: Broadcast[ZoneIndex] = pin(
+      spark.sparkContext.broadcast(new ZoneIndex(zones.toArray)))(_.destroy())
+
+    /** Registers `free(t)` to run at [[release]]; returns `t`. */
+    def pin[T](t: T)(free: T => Unit): T =
+      releases.synchronized { releases += (() => free(t)); t }
+
+    /** The kernel's per-(tile, fid) partials of `tiles` (lazy). */
+    def partials(tiles: DataFrame, collectValues: Boolean,
+        lastWins: Boolean): DataFrame =
+      ZonalStats.tilePartials(tiles, bc, grid, nodata, collectValues,
+        lastWins)
+
+    /** Per-FID stats of `tiles` as driver-side rows (one Spark job). */
+    def fidRows(tiles: DataFrame,
+        lastWins: Boolean): Seq[ZonalStats.FidStatRow] =
+      ZonalStats.collectFidStats(ZonalStats.fidStats(
+        partials(tiles, collectValues = false, lastWins)))
+
+    def release(): Unit = releases.synchronized {
+      releases.foreach(r =>
+        try r() catch { case scala.util.control.NonFatal(_) => () })
+      releases.clear()
+    }
+
+    /** Runs `body` to its materialized result, then releases
+      * everything pinned — also when a step failed. */
+    def releasing[T](body: => T): T = try body finally release()
+  }
+
+  /** A tile table addressed as one zonal raster — reference rasters
+    * are `(path, band)` (runner.py:264-265): the multi-band rule (a
+    * multi-band table scanned without a band would mix every band's
+    * rows into the same stats, so it fails loudly), the band's rows
+    * and nodata, and the unset-FID fallback's manifest-pruned scan. */
+  private[graft] final class BandScan(val table: TileTable,
+      val band: Option[Int]) {
+    require(table.manifest.bands.isEmpty || band.isDefined,
+      s"${table.root} is multi-band: pass the band to address")
+
+    /** A run of `zonesRaw` over the addressed band. */
+    def zoneRun(spark: SparkSession, zonesRaw: Seq[Zone]): ZoneRun =
+      new ZoneRun(spark, zonesRaw, table.grid,
+        band.fold(table.nodata)(table.nodataFor))
+
+    /** `df`'s rows of the addressed band (a raw-file or change scan). */
+    def rows(df: DataFrame): DataFrame = TileTable.bandRows(df, band)
+
+    def pruned(spark: SparkSession, env: Envelope): DataFrame =
+      band.fold(table.readPruned(spark, env))(
+        table.readPrunedBand(spark, env, _))
+
+    /** [[finishStats]]' fallback scan: None when the manifest's file
+      * index (driver-side, ~ms) proves no file intersects `env`. */
+    def fallback(spark: SparkSession)(env: Envelope): Option[DataFrame] =
+      if (table.prunedFiles(env).isEmpty) None else Some(pruned(spark, env))
+  }
 
   /** Table-level entry: the manifest-pruned zonal run with the
     * percentile mode chosen from the table's size (see
-    * [[choosePercentileMode]]) unless overridden. */
-  def runTable(spark: SparkSession, table: graft.sources.TileTable,
+    * [[choosePercentileMode]]). */
+  def runTable(spark: SparkSession, table: TileTable,
       zonesRaw: Seq[Zone], percentilesRaw: Seq[Double] = Nil,
       lastWins: Boolean = false,
-      exactPercentilesOverride: Option[Boolean] = None,
       band: Option[Int] = None): DataFrame = {
-    // reference rasters are addressed as (path, band) (runner.py:264-265):
-    // a multi-band table scanned without a band filter would mix every
-    // band's rows into the same stats — fail loudly instead
-    require(table.manifest.bands.isEmpty || band.isDefined,
-      s"${table.root} is multi-band: pass the band to address")
-    val env = Zone.totalEnvelope(zonesRaw)
-    val exact = choosePercentileMode(
-      table.manifest.files.map(_.rows).sum, exactPercentilesOverride)
-    run(spark, table.readPruned(spark, env, band), zonesRaw, table.grid,
-      table.nodataFor(band), percentilesRaw, exactPercentiles = exact,
-      lastWins = lastWins,
-      fallbackTiles = Some(e => table.readPruned(spark, e, band)))
+    val scan = new BandScan(table, band)
+    direct(spark, scan.pruned(spark, Zone.totalEnvelope(zonesRaw)),
+      scan.zoneRun(spark, zonesRaw), percentilesRaw,
+      choosePercentileMode(table.manifest.files.map(_.rows).sum),
+      lastWins, histogram = None, scan.fallback(spark))
   }
 
   /** Per-FID algebraic stats of `tiles` against `zonesRaw` — the
@@ -86,18 +167,13 @@ object ZonalEngine {
   def fidStatsFor(spark: SparkSession, tiles: DataFrame,
       zonesRaw: Seq[Zone], grid: RasterGrid, nodata: Option[Double],
       simplify: Boolean = true, lastWins: Boolean = false): DataFrame = {
-    val zones =
-      if (simplify)
-        zonesRaw.map(z => z.copy(geom =
-          Zone.simplifyHalfPixel(z.geom, grid.gt.px)))
-      else zonesRaw
-    val bc = spark.sparkContext.broadcast(new ZoneIndex(zones.toArray))
+    val zr = new ZoneRun(spark, zonesRaw, grid, nodata, simplify)
     // the result is lazy (callers save it to parquet), so the zone
     // index broadcast outlives this frame's materialization — parked
     // in the session registry, released at the next drain
-    graft.engine.Caches.register(spark, () => bc.destroy())
-    ZonalStats.fidStats(ZonalStats.tilePartials(tiles, bc, grid, nodata,
-      collectValues = false, lastWins))
+    graft.engine.Caches.register(spark, () => zr.release())
+    ZonalStats.fidStats(zr.partials(tiles, collectValues = false,
+      lastWins))
   }
 
   /** Incremental zonal update — the 100 TB growth path: instead of
@@ -128,174 +204,143 @@ object ZonalEngine {
     *
     * The unset-FID envelope fallback still consults the WHOLE table
     * (manifest-pruned to the unset slivers): a zone too thin to own a
-    * pixel stays correct however many increments have run. */
-  /** @param mergedStatsSink when set, receives the merged per-FID
+    * pixel stays correct however many increments have run. The delta,
+    * the retraction and any min/max recompute all run against ONE
+    * zone index, released with the run.
+    *
+    * @param mergedStatsSink when set, receives the merged per-FID
     *   stats (the [[fidStatsFor]] shape at the head version) after
     *   materialization — callers that run incrementally every day
     *   persist them as the NEXT increment's `prevFidStats`
     *   (`ZonalJob`'s sidecar). */
-  def runIncremental(spark: SparkSession, table: graft.sources.TileTable,
+  def runIncremental(spark: SparkSession, table: TileTable,
       zonesRaw: Seq[Zone], prevFidStats: DataFrame, fromVersion: Int,
       lastWins: Boolean = false,
       band: Option[Int] = None,
       mergedStatsSink: Option[DataFrame => Unit] = None): DataFrame = {
-    require(table.manifest.bands.isEmpty || band.isDefined,
-      s"${table.root} is multi-band: pass the band to address")
+    val scan = new BandScan(table, band)
     // the window's upper end is the SNAPSHOT's version, not the live
     // head: a concurrent append must not leak rows into a merge whose
     // fallback scan and saved stats describe this snapshot
-    val head = table.version
-    val bandFilter: DataFrame => DataFrame = df => band match {
-      case Some(b) => df.where(org.apache.spark.sql.functions
-        .col("band") === b)
-      case None => df
+    val (addedAll, removedOpt) = TileTable.readChangesWithRemovals(spark,
+      table.root, fromVersion, table.version)
+    val zr = scan.zoneRun(spark, zonesRaw)
+    zr.releasing {
+      // The merge itself is DRIVER-SIDE: per-FID stats are
+      // zone-cardinality small (the engine-wide broadcastability
+      // assumption; Checkpoints' r3 merge sets the precedent), so the
+      // only cluster work an increment pays is the delta decode — the
+      // fold, retraction, and downstream rollup run over local frames
+      // instead of spending Spark job rounds on LocalTableScans.
+      // Spec-pinned value-identical to the Spark-side
+      // mergeFidStats/retractFidStats (TileTableChangesSpec).
+      val deltaLocal = zr.fidRows(scan.rows(addedAll), lastWins)
+      val folded = ZonalStats.mergeFidStatsLocal(
+        ZonalStats.collectFidStats(prevFidStats), deltaLocal)
+      // row-level deletes in the window retract: exact subtraction for
+      // counts/sums; fids whose extreme might have been the retracted
+      // value recompute whole from the live (pruned) table — the
+      // recompute set is the zones the takedown actually grazed
+      val afterRemovals = removedOpt match {
+        case None => folded
+        case Some(removedAll) =>
+          val (safe, unsafeFids) = ZonalStats.retractFidStatsLocal(folded,
+            zr.fidRows(scan.rows(removedAll), lastWins))
+          if (unsafeFids.isEmpty) safe
+          else {
+            val env = Zone.totalEnvelope(
+              zr.zones.filter(z => unsafeFids.contains(z.fid)))
+            // ALL zones go to the kernel (lastWins burn order must see
+            // every zone); only the unsafe fids' rows are kept
+            safe ++ zr.fidRows(scan.pruned(spark, env), lastWins)
+              .filter(r => unsafeFids.contains(r.fid))
+          }
+      }
+      mergedStatsSink.foreach(_(ZonalStats.fidStatsFrame(spark,
+        afterRemovals)))
+      // percentile-free by contract; the manifest prune index proves
+      // most increments need no fallback scan, so the tail is usually
+      // driver-only
+      finishStats(spark, zr, afterRemovals, None, percentiles = Nil,
+        exactPercentiles = true, histogram = None, scan.fallback(spark))
     }
-    val (addedAll, removedOpt) = graft.sources.TileTable
-      .readChangesWithRemovals(spark, table.root, fromVersion, head)
-    val delta = bandFilter(addedAll)
-    val nodata = table.nodataFor(band)
-    val grid = table.grid
-    val zones = zonesRaw.map(z => z.copy(geom =
-      Zone.simplifyHalfPixel(z.geom, grid.gt.px)))
-    val deltaStats = fidStatsFor(spark, delta, zonesRaw, grid, nodata,
-      simplify = true, lastWins = lastWins)
-    // The merge itself is DRIVER-SIDE: per-FID stats are
-    // zone-cardinality small (the engine-wide broadcastability
-    // assumption; Checkpoints' r3 merge sets the precedent), so the
-    // only cluster work an increment pays is the delta decode — the
-    // fold, retraction, and downstream rollup run over local frames
-    // instead of spending Spark job rounds on LocalTableScans.
-    // Spec-pinned value-identical to the Spark-side
-    // mergeFidStats/retractFidStats (TileTableChangesSpec).
-    val deltaLocal = ZonalStats.collectFidStats(deltaStats)
-    val prevLocal = ZonalStats.collectFidStats(prevFidStats)
-    val folded = ZonalStats.mergeFidStatsLocal(prevLocal, deltaLocal)
-    // row-level deletes in the window retract: exact subtraction for
-    // counts/sums; fids whose extreme might have been the retracted
-    // value recompute whole from the live (pruned) table — the
-    // recompute set is the zones the takedown actually grazed
-    val afterRemovals: Seq[ZonalStats.FidStatRow] = removedOpt match {
-      case None => folded
-      case Some(removedAll) =>
-        val removedLocal = ZonalStats.collectFidStats(
-          fidStatsFor(spark, bandFilter(removedAll), zonesRaw, grid,
-            nodata, simplify = true, lastWins = lastWins))
-        val (safe, unsafeFids) =
-          ZonalStats.retractFidStatsLocal(folded, removedLocal)
-        if (unsafeFids.isEmpty) safe
-        else {
-          val env = new org.locationtech.jts.geom.Envelope()
-          zones.filter(z => unsafeFids.contains(z.fid))
-            .foreach(z =>
-              env.expandToInclude(z.geom.getEnvelopeInternal))
-          // ALL zones go to the kernel (lastWins burn order must see
-          // every zone); only the unsafe fids' rows are kept
-          val rec = ZonalStats.collectFidStats(fidStatsFor(spark,
-            table.readPruned(spark, env, band), zonesRaw, grid,
-            nodata, simplify = true, lastWins = lastWins))
-            .filter(r => unsafeFids.contains(r.fid))
-          safe ++ rec
-        }
-    }
-    mergedStatsSink.foreach(_(ZonalStats.fidStatsFrame(spark,
-      afterRemovals)))
-    // percentile-free by contract; the manifest prune index proves
-    // most increments need no fallback scan, so the tail is usually
-    // driver-only
-    finishStats(spark, afterRemovals, None, zones, grid, nodata,
-      percentiles = Nil, exactPercentiles = true,
-      tilesFor = e => table.readPruned(spark, e, band), histogram = None,
-      tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty))
   }
 
-  /** @param exactPercentiles true (default) = exact numpy-parity
+  /** The direct single-pass run over any tile frame.
+    *
+    * @param exactPercentiles true (default) = exact numpy-parity
     *   percentiles (concatenate+sort per group — the reference's
     *   semantics, runner.py:823-904; a giant group's values land on
     *   one reducer). false = Spark's mergeable Greenwald-Khanna
     *   sketch (`percentile_approx`): map-side summaries, bounded
-    *   memory, no skewed reducer — the 100 TB scale path. */
-  /** @param lastWins false (default) = pair-join semantics: every
+    *   memory, no skewed reducer — the 100 TB scale path.
+    * @param lastWins false (default) = pair-join semantics: every
     *   overlapping zone receives the pixel (the reference's
     *   `polygons_might_overlap=True` disjoint-set mode). true =
     *   last-burn-wins: zones rasterized in ONE pass in input order,
     *   later zones overwrite earlier ones where they overlap — the
     *   reference's production job path (`polygons_might_overlap=False`,
-    *   runner.py:483-484,960). */
-  /** @param fallbackTiles when the caller owns a prunable source
+    *   runner.py:483-484,960).
+    * @param fallbackTiles when the caller owns a prunable source
     *   (TileTable), a function producing a scan restricted to an
     *   envelope — the unset-FID fallback pass then reads only the
     *   tiles covering the fallback windows instead of re-scanning
     *   `tiles`. At scale the windows are a sliver-sized subset of the
     *   zones, so this turns an O(table) rescan into an O(windows)
-    *   read. */
+    *   read.
+    * @param fallbackHasTiles manifest-prune short-circuit: when the
+    *   caller can prove that NO tile intersects the unset zones'
+    *   envelope, the fallback scan would produce zero partials —
+    *   identical to the rollup's zero-fill — so it is skipped. */
   def run(spark: SparkSession, tiles: DataFrame, zonesRaw: Seq[Zone],
       grid: RasterGrid, nodata: Option[Double],
       percentilesRaw: Seq[Double] = Nil,
       simplify: Boolean = true,
       exactPercentiles: Boolean = true,
       lastWins: Boolean = false,
-      fallbackTiles: Option[org.locationtech.jts.geom.Envelope => DataFrame]
-        = None,
+      fallbackTiles: Option[Envelope => DataFrame] = None,
       histogram: Option[(Double, Double, Int)] = None,
-      fallbackHasTiles: Option[
-        org.locationtech.jts.geom.Envelope => Boolean] = None): DataFrame = {
-    val percentiles = normalizePercentiles(percentilesRaw)
-    val pKeys = percentileKeys(percentiles)
-    val collectVals = percentiles.nonEmpty
+      fallbackHasTiles: Option[Envelope => Boolean] = None): DataFrame =
+    direct(spark, tiles, new ZoneRun(spark, zonesRaw, grid, nodata,
+        simplify), percentilesRaw, exactPercentiles, lastWins, histogram,
+      env => if (fallbackHasTiles.exists(f => !f(env))) None
+        else Some(fallbackTiles.fold(tiles)(_(env))))
 
-    // VectorTranslate simplifyTolerance = pixel_width*0.5 (runner.py:349-365)
-    val zones =
-      if (simplify)
-        zonesRaw.map(z => z.copy(geom =
-          Zone.simplifyHalfPixel(z.geom, grid.gt.px)))
-      else zonesRaw
-    val idx = new ZoneIndex(zones.toArray)
-
-    // bbox short-circuit (runner.py:409-450): zero stats, no tile IO
-    if (!idx.totalEnvelope.intersects(grid.rasterEnvelope)) {
-      return ZonalStats.groupStatsLocalFrame(spark, Nil,
-        zones.map(z => (z.fid, Option(z.group))), pKeys)
+  /** The single-pass run of [[run]] and [[runTable]]. */
+  private def direct(spark: SparkSession, tiles: DataFrame, zr: ZoneRun,
+      percentilesRaw: Seq[Double], exactPercentiles: Boolean,
+      lastWins: Boolean, histogram: Option[(Double, Double, Int)],
+      fallback: Envelope => Option[DataFrame]): DataFrame =
+    zr.releasing {
+      val percentiles = normalizePercentiles(percentilesRaw)
+      // bbox short-circuit (runner.py:409-450): zero stats, no tile IO
+      if (!Zone.totalEnvelope(zr.zones).intersects(zr.grid.rasterEnvelope))
+        ZonalStats.groupStatsLocalFrame(spark, Nil, zr.zoneGroups,
+          percentileKeys(percentiles))
+      else {
+        // The decode+PIP kernel is the dominant cost: it must run
+        // exactly once. Its per-FID stats are zone-cardinality small,
+        // so they are COLLECTED (one job) and every downstream
+        // consumer — fallback detection, rollup — reads the
+        // driver-side rows. The raw partials are cached only when the
+        // exact-percentile path needs their value chunks a second time.
+        val collectVals = percentiles.nonEmpty
+        val partials0 = zr.partials(tiles, collectVals, lastWins)
+        val partials =
+          if (!collectVals) partials0
+          else zr.pin(partials0.persist(StorageLevel.MEMORY_AND_DISK))(
+            _.unpersist(false))
+        val fidRows =
+          ZonalStats.collectFidStats(ZonalStats.fidStats(partials))
+        finishStats(spark, zr, fidRows,
+          if (collectVals) Some(valueChunks(partials)) else None,
+          percentiles, exactPercentiles, histogram, fallback)
+      }
     }
 
-    val bc = spark.sparkContext.broadcast(idx)
-    // The decode+PIP kernel is the dominant cost: it must run exactly
-    // once. Its per-FID stats are zone-cardinality small, so they are
-    // COLLECTED (one job) and every downstream consumer — fallback
-    // detection, rollup — reads the driver-side rows. The raw partials
-    // are cached only when the exact-percentile path needs their value
-    // chunks a second time. Every persist/broadcast is released once
-    // the (dimension-sized) result has materialized — a long-lived
-    // session must not depend on the ContextCleaner for block-manager
-    // hygiene.
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    releases += (() => bc.destroy())
-    val partials0 = ZonalStats.tilePartials(tiles, bc, grid, nodata,
-      collectVals, lastWins)
-    val partials =
-      if (collectVals) {
-        val p = partials0.persist(StorageLevel.MEMORY_AND_DISK)
-        releases += (() => { p.unpersist(false); () })
-        p
-      } else partials0
-    val fidRows =
-      try ZonalStats.collectFidStats(ZonalStats.fidStats(partials))
-      catch { case e: Throwable => release(releases.toSeq); throw e }
-
-    val mainChunks =
-      if (!collectVals) None
-      else Some(partials.select(col("fid"), col("vals"))
-        .where(size(col("vals")) > 0))
-    val tilesFor = fallbackTiles.getOrElse(
-      (_: org.locationtech.jts.geom.Envelope) => tiles)
-    finishStats(spark, fidRows, mainChunks, zones, grid, nodata,
-      percentiles, exactPercentiles, tilesFor, histogram,
-      releases.toSeq, tilesNonEmpty = fallbackHasTiles)
-  }
-
-  private def release(releases: Seq[() => Unit]): Unit =
-    releases.foreach { r =>
-      try r() catch { case scala.util.control.NonFatal(_) => () }
-    }
+  /** The (fid, vals) percentile value chunks of a partials frame. */
+  private[graft] def valueChunks(partials: Dataset[_]): DataFrame =
+    partials.select(col("fid"), col("vals")).where(size(col("vals")) > 0)
 
   /** The tail of every zonal path — direct ([[run]]), checkpointed
     * ([[graft.engine.Checkpoints]]) and incremental
@@ -304,59 +349,39 @@ object ZonalEngine {
     * unset-FID envelope fallback, the group percentiles (the only
     * Spark work left, [[ZonalStats.groupPercentiles]]) and the
     * driver-side rollup ([[ZonalStats.groupStatsLocalFrame]]). The
-    * result is a local, materialized frame.
+    * result is a local, materialized frame, so the caller's
+    * [[ZoneRun.releasing]] drops the run's caches right after it.
     *
-    * @param zones   the SIMPLIFIED zone set the kernel ran against
-    * @param tilesFor envelope-pruned tile scan for the fallback pass
-    * @param releases caller-cached intermediates (persists/broadcasts)
-    *   backing `mainChunks`; released synchronously once the result
-    *   has materialized, or when any step fails
-    * @param tilesNonEmpty manifest-prune short-circuit: when the caller
-    *   can prove (from the driver-side file index, ~ms) that NO table
-    *   file intersects the unset zones' envelope, the fallback scan
-    *   would read zero tiles and produce zero partials — identical to
-    *   the zero-fill of the rollup — so it is skipped
+    * @param zr       the run whose (simplified) zones the kernel saw;
+    *   the fallback pass pins its caches there
+    * @param fallback the fallback pass's tile scan for an envelope, or
+    *   None when the caller proves no tile intersects it
     */
-  private[graft] def finishStats(spark: SparkSession,
+  private[graft] def finishStats(spark: SparkSession, zr: ZoneRun,
       fidRows: Seq[ZonalStats.FidStatRow], mainChunks: Option[DataFrame],
-      zones: Seq[Zone], grid: RasterGrid,
-      nodata: Option[Double], percentiles: Seq[Double],
-      exactPercentiles: Boolean,
-      tilesFor: org.locationtech.jts.geom.Envelope => DataFrame,
+      percentiles: Seq[Double], exactPercentiles: Boolean,
       histogram: Option[(Double, Double, Int)],
-      releases: Seq[() => Unit] = Nil,
-      tilesNonEmpty: Option[
-        org.locationtech.jts.geom.Envelope => Boolean] = None): DataFrame = {
+      fallback: Envelope => Option[DataFrame]): DataFrame = {
     import spark.implicits._
-    val zoneGroups = zones.map(z => (z.fid, Option(z.group)))
-    val fbReleases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    try {
-      // ---- unset-FID envelope fallback (runner.py:697-811) ----
-      val presentFids = fidRows.iterator.map(_.fid).toSet
-      val unset = zones.filter(z => !presentFids.contains(z.fid))
-      val (fallbackRows, fallbackChunks) =
-        if (unset.isEmpty ||
-            tilesNonEmpty.exists(f => !f(Zone.totalEnvelope(unset))))
-          (Nil, None)
-        else runFallback(spark, tilesFor(Zone.totalEnvelope(unset)),
-          unset, grid, nodata, mainChunks.isDefined, fbReleases)
+    // ---- unset-FID envelope fallback (runner.py:697-811) ----
+    val presentFids = fidRows.iterator.map(_.fid).toSet
+    val unset = zr.zones.filter(z => !presentFids.contains(z.fid))
+    val (fallbackRows, fallbackChunks) =
+      (if (unset.isEmpty) None else fallback(Zone.totalEnvelope(unset)))
+        .fold((Seq.empty[ZonalStats.FidStatRow], Option.empty[DataFrame]))(
+          runFallback(spark, _, unset, zr, mainChunks.isDefined))
 
-      val pcts = mainChunks match {
-        case None => Map.empty[Option[String], IndexedSeq[java.lang.Double]]
-        case Some(mc) =>
-          val all = fallbackChunks.fold(mc)(mc.unionByName(_))
-          ZonalStats.groupPercentiles(
-            broadcast(zoneGroups.toDF("fid", "group"))
-              .join(all, Seq("fid")).select("group", "vals"),
-            percentiles.toArray, exactPercentiles, histogram)
-      }
-      ZonalStats.groupStatsLocalFrame(spark, fidRows ++ fallbackRows,
-        zoneGroups, percentileKeys(percentiles), pcts)
-    // every Spark action of the run is done here, so the persists and
-    // broadcasts it pinned are dropped now, synchronously — also when a
-    // step failed: a long-lived session must not wait on the
-    // ContextCleaner (under ParallelGC + a big heap: possibly never)
-    } finally release(releases ++ fbReleases)
+    val pcts = mainChunks match {
+      case None => Map.empty[Option[String], IndexedSeq[java.lang.Double]]
+      case Some(mc) =>
+        val all = fallbackChunks.fold(mc)(mc.unionByName(_))
+        ZonalStats.groupPercentiles(
+          broadcast(zr.zoneGroups.toDF("fid", "group"))
+            .join(all, Seq("fid")).select("group", "vals"),
+          percentiles.toArray, exactPercentiles, histogram)
+    }
+    ZonalStats.groupStatsLocalFrame(spark, fidRows ++ fallbackRows,
+      zr.zoneGroups, percentileKeys(percentiles), pcts)
   }
 
   /** Envelope-window fallback for zones that captured no pixel:
@@ -366,11 +391,10 @@ object ZonalEngine {
     * across parts (runner.py:700-811).
     */
   private def runFallback(spark: SparkSession, tiles: DataFrame,
-      unset: Seq[Zone], grid: RasterGrid, nodata: Option[Double],
-      collectVals: Boolean,
-      releases: scala.collection.mutable.Buffer[() => Unit])
+      unset: Seq[Zone], zr: ZoneRun, collectVals: Boolean)
       : (Seq[ZonalStats.FidStatRow], Option[DataFrame]) = {
     import spark.implicits._
+    val grid = zr.grid
 
     val windows: Array[(Long, Int, PixelWindow)] = (for {
       z <- unset.iterator
@@ -393,32 +417,25 @@ object ZonalEngine {
     }
     tree.build() // immutable + thread-safe for queries after build
 
-    val bcWin = spark.sparkContext.broadcast((windows, tree))
-    val gridB = grid
-    val nodataB = nodata
-    val cvB = collectVals
-    releases += (() => bcWin.destroy())
+    val bcWin = zr.pin(spark.sparkContext.broadcast((windows, tree)))(
+      _.destroy())
+    val nodata = zr.nodata // the closure below must not capture `zr`
 
     val winPartials0 = tiles.select("image_id", "bytes", "fmt")
       .as[(String, Array[Byte], String)]
       .flatMap { case (id, bytes, fmt) =>
         val (ws, t) = bcWin.value
-        fallbackTileKernel(id, bytes, fmt, gridB, ws, t, nodataB, cvB)
+        fallbackTileKernel(id, bytes, fmt, grid, ws, t, nodata, collectVals)
       }
     // cache only when the percentile path re-reads the value chunks —
     // the scalar-stats path consumes the kernel output exactly once
     val winPartials =
-      if (collectVals) {
-        val w = winPartials0.persist(StorageLevel.MEMORY_AND_DISK)
-        releases += (() => { w.unpersist(false); () })
-        w
-      } else winPartials0
+      if (!collectVals) winPartials0
+      else zr.pin(winPartials0.persist(StorageLevel.MEMORY_AND_DISK))(
+        _.unpersist(false))
 
-    val agg = winPartials.groupBy("fid", "part").agg(
-      sum("cnt").as("cnt"), sum("nodata").as("nodata"),
-      min("mn").as("mn"), max("mx").as("mx"),
-      sum("sum").as("sum"), sum("sumsq").as("sumsq"))
-      .collect()
+    val agg = winPartials.groupBy("fid", "part")
+      .agg(ZonalStats.fidAggs.head, ZonalStats.fidAggs.tail: _*).collect()
 
     // last-part-wins merge (runner.py:783-806 uses `=`, not `+=`)
     val rows = agg.groupBy(_.getLong(0)).map { case (fid, parts) =>
@@ -431,11 +448,7 @@ object ZonalEngine {
           last.getDouble(5), last.getDouble(6), last.getDouble(7))
     }.toSeq
 
-    val fbChunks =
-      if (!collectVals) None
-      else Some(winPartials.select($"fid", $"vals")
-        .where(size($"vals") > 0))
-    (rows, fbChunks)
+    (rows, if (collectVals) Some(valueChunks(winPartials)) else None)
   }
 
   /** Per-tile kernel of the fallback pass: every pixel of the tile

@@ -5,7 +5,7 @@ import graft.geom._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 
 /** Per-(tile, fid) partial statistics — the Spark analogue of the
   * reference's per-block accumulator update
@@ -311,15 +311,16 @@ object ZonalStats {
     * `runner.py:491-500`). Algebraic — Spark's partial aggregation
     * merges map-side, so zone-size skew does not concentrate pixel
     * rows on one reducer. */
-  def fidStats(partials: Dataset[_]): DataFrame = {
-    partials.groupBy("fid").agg(
-      sum("cnt").as("cnt"),
-      sum("nodata").as("nodata"),
-      min("mn").as("mn"),
-      max("mx").as("mx"),
-      sum("sum").as("sum"),
-      sum("sumsq").as("sumsq"))
-  }
+  def fidStats(partials: Dataset[_]): DataFrame =
+    partials.groupBy("fid").agg(fidAggs.head, fidAggs.tail: _*)
+
+  /** The per-FID aggregate columns (cnt, nodata, mn, mx, sum, sumsq) —
+    * the Spark side of [[FidStatRow.merge]], shared by every grouping
+    * of kernel partials (per fid, per fallback part, per chunk scan
+    * partition). */
+  private[graft] def fidAggs: Seq[Column] = Seq(sum("cnt").as("cnt"),
+    sum("nodata").as("nodata"), min("mn").as("mn"), max("mx").as("mx"),
+    sum("sum").as("sum"), sum("sumsq").as("sumsq"))
 
   /** Merge two per-FID stat frames (the [[fidStats]] shape) — the
     * algebra is the same commutative monoid the partial aggregation
@@ -336,7 +337,31 @@ object ZonalStats {
     * over them should cost driver microseconds, not Spark job rounds
     * on LocalTableScans. */
   final case class FidStatRow(fid: Long, cnt: Long, nodata: Long,
-      mn: Double, mx: Double, sum: Double, sumsq: Double)
+      mn: Double, mx: Double, sum: Double, sumsq: Double) {
+    /** The per-FID monoid ([[fidStats]]' aggregate, driver-side):
+      * counts and sums add, extremes take min/max; `this` is the left
+      * operand. */
+    def merge(o: FidStatRow): FidStatRow = FidStatRow(fid, cnt + o.cnt,
+      nodata + o.nodata, math.min(mn, o.mn), math.max(mx, o.mx),
+      sum + o.sum, sumsq + o.sumsq)
+  }
+
+  /** Folds `rows` into `acc` per fid, in order, with
+    * [[FidStatRow.merge]]. A fid's first row starts its accumulator
+    * as it is, or — `fromZero` — merged into the monoid's identity.
+    * The two starts differ on a `-0.0` sum (`0.0 + -0.0` is `0.0`),
+    * so each caller keeps the one its saved outputs were made with. */
+  def foldFidRows(acc: scala.collection.mutable.Map[Long, FidStatRow],
+      rows: IterableOnce[FidStatRow], fromZero: Boolean = false): Unit =
+    rows.iterator.foreach { r =>
+      acc(r.fid) = acc.get(r.fid) match {
+        case Some(p) => p.merge(r)
+        case None if fromZero => FidStatRow(r.fid, 0L, 0L,
+          Double.PositiveInfinity, Double.NegativeInfinity, 0.0, 0.0)
+          .merge(r)
+        case None => r
+      }
+    }
 
   def collectFidStats(df: DataFrame): Seq[FidStatRow] =
     df.select("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
@@ -362,14 +387,7 @@ object ZonalStats {
       b: Seq[FidStatRow]): Seq[FidStatRow] = {
     val m = scala.collection.mutable.LinkedHashMap.empty[Long, FidStatRow]
     a.foreach(r => m(r.fid) = r)
-    b.foreach { r =>
-      m(r.fid) = m.get(r.fid) match {
-        case None => r
-        case Some(p) => FidStatRow(r.fid, p.cnt + r.cnt,
-          p.nodata + r.nodata, math.min(p.mn, r.mn),
-          math.max(p.mx, r.mx), p.sum + r.sum, p.sumsq + r.sumsq)
-      }
-    }
+    foldFidRows(m, b)
     m.values.toSeq
   }
 

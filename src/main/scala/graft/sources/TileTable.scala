@@ -255,18 +255,6 @@ class TileTable(val root: String, val manifest: TileManifest,
     manifest.bands.find(_.band == band).map(_.nodata)
       .getOrElse(manifest.nodata)
 
-  /** Optional-band variants — the one place "scan this table,
-    * optionally one band of it" is spelled out (job path, resumable
-    * path and fallback scans all dispatch through these). */
-  def nodataFor(band: Option[Int]): Option[Double] =
-    band.map(nodataFor).getOrElse(nodata)
-
-  def readPruned(spark: SparkSession, env: Envelope,
-      band: Option[Int]): DataFrame = band match {
-    case Some(b) => readPrunedBand(spark, env, b)
-    case None => readPruned(spark, env)
-  }
-
   /** Manifest-pruned scan of ONE band of a multi-band table. The
     * band-equality predicate lands in the parquet scan; rows are
     * sorted (band, cell) inside each file so both predicates prune
@@ -274,7 +262,7 @@ class TileTable(val root: String, val manifest: TileManifest,
   def readPrunedBand(spark: SparkSession, env: Envelope,
       band: Int): DataFrame = {
     require(manifest.bands.nonEmpty, s"$root is not multi-band")
-    readPruned(spark, env).where(col("band") === band)
+    TileTable.bandRows(readPruned(spark, env), Some(band))
   }
 }
 
@@ -287,6 +275,12 @@ object TileTable {
   val DefaultWriter = "default"
 
   private val mapper = new ObjectMapper()
+
+  /** `df`'s rows of one band, all rows when `band` is None — the one
+    * spelling of the band filter (pruned reads, the zonal paths'
+    * raw-file and change scans). */
+  def bandRows(df: DataFrame, band: Option[Int]): DataFrame =
+    band.fold(df)(b => df.where(col("band") === b))
 
   /** The metadata plane (manifest commit, segments, lock, vacuum
     * aging) runs entirely through [[ManifestStore.forRoot]]: local

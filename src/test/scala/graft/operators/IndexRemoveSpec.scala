@@ -151,6 +151,8 @@ class IndexRemoveSpec extends SparkSpec {
       .select("id", "list_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(asg(appended) == asg(rebuilt))
+    // one codebook instance per index, handed on to derived indexes
+    assert(appended.refIndex eq appended.refIndex)
     // save/load: codebook floats bit-identical, assignment intact
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ivf-idx").toString
@@ -168,6 +170,7 @@ class IndexRemoveSpec extends SparkSpec {
       df.where(!col("id").isin(6L, 7L)), "id", "vec", cents,
       "cent_id", "cvec")
     assert(asg(after) == asg(reduced))
+    assert(after.refIndex eq loaded.refIndex)
     // stored-assignment serving ≡ the one-shot operator
     val queries = df.where(col("id") >= 30)
     def topk(out: org.apache.spark.sql.DataFrame) = out

@@ -140,9 +140,6 @@ class ZonalParitySpec extends SparkSpec {
     assert(ZonalEngine.choosePercentileMode(1000L))
     assert(!ZonalEngine.choosePercentileMode(
       ZonalEngine.ExactPercentileMaxTiles + 1))
-    // explicit override beats the size heuristic in both directions
-    assert(ZonalEngine.choosePercentileMode(Long.MaxValue, Some(true)))
-    assert(!ZonalEngine.choosePercentileMode(1L, Some(false)))
 
     // a fixture-sized table picks the exact path: runTable output is
     // value-identical to the explicit exact run
